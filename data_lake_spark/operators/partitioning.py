@@ -41,6 +41,17 @@ def shuffle_parallelism(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def decode_spread(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """One narrow round-robin exchange of (doc_id, text) before a
+    media synthesis + Arrow decode pass: the testdata corpus ships as
+    a single parquet row group (see the session.py note), so without
+    it the per-media Python decode serializes on ONE task. Sized from
+    the session's shuffle width — scale-adaptive, never a local[32]
+    literal; on cluster files with real splits the exchange is
+    redundant but stays narrow (r11, guide §2.2/§2.6)."""
+    return docs.repartition(shuffle_parallelism(spark))
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:

@@ -293,20 +293,6 @@ def codes_elems(codes_arr: DataFrame, id_col: str = "vec_id") -> DataFrame:
     )
 
 
-def _lut_query_rows(
-    emb: DataFrame, query_ids: list[int], id_col: str, vec_col: str
-) -> list:
-    """The |Q| query vectors as driver rows (an id-pushdown scan) —
-    factored out of :func:`_lut_frame` so a caller that is ALSO doing
-    driver work (training/collecting a codebook) can prefetch these on
-    a pool thread and overlap the two collects (guide §2.6)."""
-    return (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("q"), _to_double(vec_col).alias("v"))
-        .collect()
-    )
-
-
 def _lut_frame(
     emb: DataFrame,
     query_ids: list[int],
@@ -315,7 +301,6 @@ def _lut_frame(
     subdim: int,
     id_col: str,
     vec_col: str,
-    qrows: list | None = None,
 ) -> DataFrame:
     """(query_id, s, code, lut): each query's m×k ADC lookup table.
 
@@ -334,12 +319,15 @@ def _lut_frame(
     Python zip) fall back to the expression form wholesale."""
     import math
 
-    if qrows is None:
-        qrows = _lut_query_rows(emb, query_ids, id_col, vec_col)
+    qvecs = (
+        emb.filter(F.col(id_col).isin(query_ids))
+        .select(F.col(id_col).alias("q"), _to_double(vec_col).alias("v"))
+        .collect()
+    )
     dim = subdim * len(values)
-    if all(r["v"] is not None and len(r["v"]) == dim for r in qrows):
+    if all(r["v"] is not None and len(r["v"]) == dim for r in qvecs):
         rows = []
-        for r in qrows:
+        for r in qvecs:
             vec = r["v"]
             for s in range(len(values)):
                 sub = vec[s * subdim : (s + 1) * subdim]
@@ -451,32 +439,12 @@ def pq_adc_topk(
     encode and never joined pairwise. approx_dot is deterministic
     (quantized means + quantized LUT terms, exact integer sums), and
     bit-identical to the pure-DataFrame formulation (parity test)."""
-    qrows = None
     if codebook is None:
-        # overlap codebook training with the LUT's query fetch — the
-        # ivf_pq_topk pattern (guide §2.6); serial under
-        # SPARK_GRAFT_SERIAL_BUILD=1
-        import os
-
-        if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-            codebook = pq_codebook_lit(emb, m, k_codes, id_col, vec_col)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_cb = pool.submit(
-                    pq_codebook_lit, emb, m, k_codes, id_col, vec_col
-                )
-                f_q = pool.submit(
-                    _lut_query_rows, emb, query_ids, id_col, vec_col
-                )
-                codebook, qrows = f_cb.result(), f_q.result()
+        codebook = pq_codebook_lit(emb, m, k_codes, id_col, vec_col)
     values, present, subdim = codebook
     if codes is None:
         codes = _codes_frame(emb, values, present, subdim, id_col, vec_col)
-    lut = _lut_frame(
-        emb, query_ids, values, present, subdim, id_col, vec_col, qrows=qrows
-    )
+    lut = _lut_frame(emb, query_ids, values, present, subdim, id_col, vec_col)
     scored = (
         codes.join(F.broadcast(lut), ["s", "code"])
         .groupBy("query_id", "cand_id")
@@ -525,28 +493,8 @@ def ivf_pq_topk(
     form)."""
     from data_lake_spark.operators.similarity import probed_cells
 
-    qrows = None
     if codebook is None:
-        # Codebook training (a corpus-derived collect) and the LUT's
-        # query-vector fetch (an id-pushdown collect) are independent
-        # driver jobs that ran back to back; overlap them (guide §2.6,
-        # the ann_recall build pattern). Serial under
-        # SPARK_GRAFT_SERIAL_BUILD=1 for A/B.
-        import os
-
-        if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-            codebook = pq_codebook_lit(emb, m, k_codes, id_col, vec_col)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_cb = pool.submit(
-                    pq_codebook_lit, emb, m, k_codes, id_col, vec_col
-                )
-                f_q = pool.submit(
-                    _lut_query_rows, emb, query_ids, id_col, vec_col
-                )
-                codebook, qrows = f_cb.result(), f_q.result()
+        codebook = pq_codebook_lit(emb, m, k_codes, id_col, vec_col)
     values, present, subdim = codebook
     # candidate selection BEFORE scoring: only probed cells' members
     # enter the ADC join — with codes cell-partitioned at scale this is
@@ -566,9 +514,7 @@ def ivf_pq_topk(
     )
     if codes is None:
         codes = _codes_frame(emb, values, present, subdim, id_col, vec_col)
-    lut = _lut_frame(
-        emb, query_ids, values, present, subdim, id_col, vec_col, qrows=qrows
-    )
+    lut = _lut_frame(emb, query_ids, values, present, subdim, id_col, vec_col)
     scored = (
         cands.join(codes, "cand_id")
         .join(F.broadcast(lut), ["query_id", "s", "code"])

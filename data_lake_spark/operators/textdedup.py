@@ -416,8 +416,8 @@ def token_kgrams(
                 F.concat(
                     F.lit(
                         "pack_doc_pos overflow: document token count > "
-                        f"{_POS_BITS} cannot be position-packed into the "
-                        "int64 (doc_id,pos) key; raise _POS_BITS or "
+                        f"{_POS_BITS + k - 1} cannot be position-packed "
+                        "into the int64 (doc_id,pos) key; raise _POS_BITS or "
                         "switch the keeper to a (doc_id,pos) struct MIN "
                         "— n_tokens="
                     ),

@@ -33,21 +33,9 @@ from data_lake_spark.functions.exact import (
     micro_share_sql,
     oracle_micro_share_sql,
 )
+from data_lake_spark.operators.partitioning import decode_spread
 from data_lake_spark.operators.redact import PII_SCAN_PATTERNS
 from data_lake_spark.queries import QuerySpec
-
-
-def _decode_spread(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """One narrow round-robin exchange of (doc_id, text) before a
-    media synthesis + Arrow decode pass: the testdata corpus ships as
-    a single parquet row group (see the session.py note), so without
-    it the per-media Python decode serializes on ONE task. Sized from
-    the session's shuffle width — scale-adaptive, never a local[32]
-    literal; on cluster files with real splits the exchange is
-    redundant but stays narrow (r11, guide §2.2/§2.6)."""
-    from data_lake_spark.operators.partitioning import shuffle_parallelism
-
-    return docs.repartition(shuffle_parallelism(spark))
 
 REGISTRY: dict[str, QuerySpec] = {}
 
@@ -413,7 +401,7 @@ def q_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         hamming_pairs,
     )
 
-    docs = _decode_spread(
+    docs = decode_spread(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     pairs = hamming_pairs(dhash_table(bmp_from_text_col(docs)), max_hamming=6)
@@ -532,7 +520,7 @@ def stored_image_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        docs = _decode_spread(
+        docs = decode_spread(
             spark,
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         )

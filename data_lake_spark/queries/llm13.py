@@ -20,21 +20,10 @@ from data_lake_spark.functions.exact import (
     micro_share_sql,
     oracle_micro_share_sql,
 )
+from data_lake_spark.operators.partitioning import decode_spread
 from data_lake_spark.queries import QuerySpec
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-
-def _decode_spread(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """One narrow round-robin exchange before a media synthesis +
-    Arrow decode pass — the llm11._decode_spread rationale: the
-    testdata corpus is a single parquet row group, so the per-media
-    Python decode otherwise serializes on ONE task. Sized from the
-    session's shuffle width (scale-adaptive); on cluster files with
-    real splits the exchange is redundant but narrow (r11, §2.2/§2.6)."""
-    from data_lake_spark.operators.partitioning import shuffle_parallelism
-
-    return docs.repartition(shuffle_parallelism(spark))
 
 
 # ---------------------------------------------------------------------------
@@ -66,7 +55,7 @@ def q_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         wav_from_text_col,
     )
 
-    # no _decode_spread: the audio kernel is too cheap for the extra
+    # no decode_spread: the audio kernel is too cheap for the extra
     # exchange to pay (see q_dedup_audio_keepers, r11 measured)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = audio_pairs(wav_from_text_col(docs), max_hamming=6)
@@ -179,7 +168,7 @@ def q_video_frame_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_pairs,
     )
 
-    docs = _decode_spread(
+    docs = decode_spread(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     pairs = video_pairs(avi_from_text_col(docs), max_hamming=6)
@@ -305,7 +294,7 @@ def q_dedup_videos_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_videos,
     )
 
-    docs = _decode_spread(
+    docs = decode_spread(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     return dedup_videos(avi_from_text_col(docs), max_hamming=6).orderBy(
@@ -369,7 +358,7 @@ def stored_video_frame_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        docs = _decode_spread(
+        docs = decode_spread(
             spark,
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         )
@@ -494,9 +483,9 @@ def q_video_clip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # spread AFTER the window-assembly joins: one narrow exchange of the
     # assembled (id, t0..t3) rows instead of a spread docs frame feeding
-    # four join consumers (the _decode_spread rationale, placed once)
+    # four join consumers (the decode_spread rationale, placed once)
     media = avi_from_frame_text_cols(
-        _decode_spread(spark, base), "media_id", ["t0", "t1", "t2", "t3"]
+        decode_spread(spark, base), "media_id", ["t0", "t1", "t2", "t3"]
     )
     spans = video_clip_spans(media, min_frames=2)
     return (
@@ -620,7 +609,7 @@ def q_dedup_images_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_images,
     )
 
-    docs = _decode_spread(
+    docs = decode_spread(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     return dedup_images(bmp_from_text_col(docs), max_hamming=6).orderBy(
@@ -633,7 +622,7 @@ def q_dedup_audio_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_audio): envelope-fingerprint pairs → connected components →
     (media_id, keeper, is_dup). Oracle-paired end to end.
 
-    No _decode_spread here (r11, measured): the audio fingerprint is
+    No decode_spread here (r11, measured): the audio fingerprint is
     ~0.3 s of vectorized Python at sf0.1 — too cheap for the extra
     exchange to pay for itself (interleaved A/B: fingerprint stage
     0.61 s spread vs 0.63 s not), while the keepers tail pays the
@@ -851,7 +840,7 @@ def stored_audio_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        docs = _decode_spread(
+        docs = decode_spread(
             spark,
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         )

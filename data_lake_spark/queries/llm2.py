@@ -13,6 +13,7 @@ from data_lake_spark.catalog import load_table
 from data_lake_spark.operators.similarity import ann_topk_bucketed, ivf_assign
 from data_lake_spark.operators.textdedup import minhash_lsh_pairs, winnow_fingerprints
 from data_lake_spark.queries import QuerySpec
+from data_lake_spark.session import overlap
 
 _PS = "1000000000000.0"
 
@@ -141,8 +142,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Jaccard join, the expensive one) and sigs (the 8-hash MIN
     # aggregate) are INDEPENDENT given sh, so their planning + compute
     # now run as two concurrent driver-submitted jobs — sigs' tasks
-    # back-fill executors the truth join's tail frees. Serial path kept
-    # under SPARK_GRAFT_SERIAL_BUILD=1 for A/B.
+    # back-fill executors the truth join's tail frees.
     sh = shingles(docs, n=3).localCheckpoint(eager=False)
     sh.count()  # materialize the shared input once, not racily twice
 
@@ -160,16 +160,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.count()
         return s
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-        truth, sigs = _truth(), _sigs()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_truth, f_sigs = pool.submit(_truth), pool.submit(_sigs)
-            truth, sigs = f_truth.result(), f_sigs.result()
+    truth, sigs = overlap(_truth, _sigs)
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
 
     def rung(config: str, rows_per_band: int) -> DataFrame:

@@ -20,6 +20,7 @@ from data_lake_spark.operators.pq import (
     pq_encode_map_only,
 )
 from data_lake_spark.queries import QuerySpec
+from data_lake_spark.session import overlap
 
 _PS = "1000000000000.0"
 
@@ -439,22 +440,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured at 0.31/0.51/0.55 s of back-to-back serial driver work
     # (the cluster idles in between). The three EXECUTIONS already
     # overlap as independent stages of the one final job; this threads
-    # the builds too. Serial path kept under SPARK_GRAFT_SERIAL_BUILD=1
-    # for A/B.
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-        exact, probe, rerank = _exact(), _probe(), _rerank()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_e, f_p, f_r = (
-                pool.submit(_exact),
-                pool.submit(_probe),
-                pool.submit(_rerank),
-            )
-            exact, probe, rerank = f_e.result(), f_p.result(), f_r.result()
+    # the builds too.
+    exact, probe, rerank = overlap(_exact, _probe, _rerank)
     return (
         hits("ivf_pq_m4_k8_probe2", probe)
         .unionByName(hits("rerank_m8_k16_sl100", rerank))

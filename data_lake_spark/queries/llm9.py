@@ -58,8 +58,9 @@ def sq_code_cols(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     sq_search plan showed the max subtree inlined 2d times). Here the
     scale is computed once per row and referenced from the lambda as a
     plain attribute (CollapseProject keeps non-cheap multi-referenced
-    expressions un-inlined, pinned by tests/test_plan_contracts.py).
-    Same floor(+0.5) recipe, bit-identical codes."""
+    expressions un-inlined; pinned by test_plan_contracts.py::
+    test_sq_search_scale_evaluated_once_per_row). Same floor(+0.5)
+    recipe, bit-identical codes."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     out = df.withColumn("_v", v).withColumn(
         "_scale", F.array_max(F.transform(F.col("_v"), F.abs))

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 from data_lake_spark.catalog import load_table
 from data_lake_spark.operators.partitioning import shuffle_parallelism
 from data_lake_spark.queries import QuerySpec
+from data_lake_spark.session import overlap
 
 # BM25 constants k1=1.2, b=0.75 cleared of fractions (×10·avgdl): with
 # A = floored average doc length (t_tokens div n_docs — the floor is
@@ -224,8 +225,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver thread regardless of core count — the reason rrf's
     # 8↔32-core bench ratio sat at 0.98. Each thread now plans AND
     # materializes its own side, so the driver work overlaps the other
-    # side's cluster work. Serial path kept under
-    # SPARK_GRAFT_SERIAL_BUILD=1 for A/B.
+    # side's cluster work.
     def _tf() -> DataFrame:
         t = tokens.groupBy("doc_id", "tok").agg(
             F.count(F.lit(1)).cast("long").alias("tf"),
@@ -247,16 +247,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.count()
         return v
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-        tf, vecs = _tf(), _vecs()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_tf, f_vecs = pool.submit(_tf), pool.submit(_vecs)
-            tf, vecs = f_tf.result(), f_vecs.result()
+    tf, vecs = overlap(_tf, _vecs)
 
     dfreq = tf.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -602,37 +593,17 @@ def q_central_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(docs, n=3, n_hashes=8, rows_per_band=2).select(
         "doc_a", "doc_b"
     ).localCheckpoint(eager=False)  # cc and pagerank both read it
-    pairs.count()  # materialize once, not racily under both probes
     nodes = docs.select(F.col("doc_id").alias("node"))
 
-    # CC and PageRank are independent given the edge set; each is a
-    # counted-probe driver fold (its own collect + driver compute), and
-    # they ran back to back. Thread the two builds (r11, guide §2.6 —
-    # the ann_recall/lsh_recall pattern). Serial path kept under
-    # SPARK_GRAFT_SERIAL_BUILD=1 for A/B.
-    def _cc() -> DataFrame:
-        return connected_components(
-            nodes, pairs, src_col="doc_a", dst_col="doc_b"
-        )
-
-    def _pr() -> DataFrame:
-        edges = pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ).union(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        return pagerank(nodes, edges, n_iter=3)
-
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SERIAL_BUILD"):
-        cc, pr = _cc(), _pr()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_cc, f_pr = pool.submit(_cc), pool.submit(_pr)
-            cc, pr = f_cc.result(), f_pr.result()
+    # CC and PageRank build back to back: threading the two driver folds
+    # measured within noise at sf0.1.
+    cc = connected_components(nodes, pairs, src_col="doc_a", dst_col="doc_b")
+    edges = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).union(
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+    pr = pagerank(nodes, edges, n_iter=3)
 
     joined = cc.join(pr, "node").select(
         F.col("node").alias("doc_id"), "cluster_id", "rank_units"

@@ -11,6 +11,7 @@ engines (DuckDB oracle, Presto semantics in the reference).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -86,3 +87,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*thunks: Callable[[], Any]) -> list:
+    """Run independent driver-side builds concurrently and return their
+    results in argument order; the first thunk (in argument order) to
+    raise re-raises here once every thunk has finished.
+
+    For query builds whose sides share no lineage and each pay driver
+    work (Catalyst planning inside a checkpoint, a collect, a driver
+    fold): one side's planning overlaps the other's cluster pass. Each
+    thunk is wrapped with ``inheritable_thread_target`` in the calling
+    thread, so jobs it launches on a pool thread carry the caller's job
+    group and description (and, given the active session, its job
+    tags) and stay attributable to the query."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    wrap = inheritable_thread_target(session) if session else inheritable_thread_target
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(wrap(t)) for t in thunks]
+        return [f.result() for f in futures]

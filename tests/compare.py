@@ -41,7 +41,8 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
                     f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
                 )
         _ORACLE_MEMO[key] = con.execute(sql).fetchdf()
-    return _ORACLE_MEMO[key]
+    # a copy, so a caller that mutates its result cannot corrupt the memo
+    return _ORACLE_MEMO[key].copy()
 
 
 def _norm_cell(v: Any) -> Any:

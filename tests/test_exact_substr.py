@@ -195,7 +195,9 @@ def test_token_kgrams_guard_pos_doc_level(spark, monkeypatch):
     assert at_bound.count() == 8  # n - k + 1 grams, no raise
     assert at_bound.agg(F.max("pos")).collect()[0][0] == 7
     # n = _POS_BITS + k = 11: pos n - k = 8 would overflow — raises
-    with pytest.raises(Exception, match="pack_doc_pos overflow"):
+    with pytest.raises(
+        Exception, match="pack_doc_pos overflow: document token count > 10 "
+    ):
         token_kgrams(doc(8 + k), k, guard_pos=True).count()
 
 

@@ -627,3 +627,28 @@ def test_events_normalization_session_tz_independent(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
     assert a == b
+
+
+def test_sq_search_scale_evaluated_once_per_row(spark, sf_dir):
+    # sq_code_cols hoists the per-vector scale to its own projection:
+    # each branch (queries, candidates) evaluates array_max ONCE per
+    # row as the _scale column, and the per-element quantize lambda
+    # reads that attribute. Inlined, array_max sits inside the lambda
+    # and runs twice per element, 2d times per row.
+    from data_lake_spark.catalog import load_table
+    from data_lake_spark.queries.llm9 import sq_codes_expr
+
+    plan = _plan(spark, sf_dir, "sq_search")
+    n_max = len(re.findall(r"array_max\(", plan))
+    assert n_max == len(re.findall(r"\) AS _scale#\d+", plan)) == 2, plan
+    assert not re.search(r"lambdafunction\([^\n]*array_max", plan), plan
+    assert len(re.findall(r"lambdafunction\(CASE WHEN \(_scale#", plan)) == 2
+
+    # the yardstick: the single-Column form inlines the max subtree
+    inlined = _explain(
+        spark,
+        load_table(spark, sf_dir, "embeddings").select(
+            sq_codes_expr("embedding").alias("qv")
+        ),
+    )
+    assert re.search(r"lambdafunction\([^\n]*array_max", inlined), inlined
