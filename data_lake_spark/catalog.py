@@ -106,9 +106,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every testdata table as a temp view (SURVEY §2.1 S8)."""
     out: dict[str, DataFrame] = {}
     for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            df = _normalize(spark.read.parquet(path), name)
+        if os.path.exists(table_path(sf_dir, name)):
+            df = load_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

@@ -1,5 +1,5 @@
 """In-engine BPE merge learning (Sennrich et al. 2016) — the tokenizer
-TRAINING side; queries/llm3.py's ``bpe_tokens`` covers the accounting
+TRAINING side; queries/text.py's ``bpe_tokens`` covers the accounting
 (fertility) side with a fixed regex pretokenizer.
 
 The industrial shape: BPE never iterates over the corpus. One

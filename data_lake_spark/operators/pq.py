@@ -22,7 +22,7 @@ seed assignment by md5 parity of (vec_id, subspace) (the same
 engine-independent hash family as srp_bucket_expr), then exact
 quantized means — so codebooks, codes, and ADC scores are bit-identical
 across partitionings and reproducible in the DuckDB oracle
-(queries/llm7.py) with the same arithmetic.
+(queries/ann.py) with the same arithmetic.
 
 Reference parity: the reference has no ANN surface at all; this extends
 the engine for the LLM-training-data workload (SURVEY §8) alongside
@@ -481,7 +481,7 @@ def ivf_pq_topk(
     math nor a full code scan: candidate selection is an equi-join on
     the cell, scoring an equi-join on (query_id, s, code) against the
     broadcast LUT. Deterministic end to end (quantized centroid/LUT
-    arithmetic), mirrored in the DuckDB oracle (queries/llm7.py).
+    arithmetic), mirrored in the DuckDB oracle (queries/ann.py).
 
     Serving calls should pass ALL stored artifacts — ``codebook``
     (pq_codebook_lit triple), ``centroids`` (a persisted

@@ -23,7 +23,7 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
     "phone": (r"\b[0-9]{3}-[0-9]{2,4}\b", "<PHONE>"),
 }
 
-# Detection-side superset (queries/llm11.q_pii_scan): two more kinds whose
+# Detection-side superset (queries/text.q_pii_scan): two more kinds whose
 # patterns are mutually NON-overlapping with the redaction trio (no dashes
 # in the IBAN shape, spaces not dashes in the card shape), so per-kind
 # counts are order-independent and each kind can be audited on the

@@ -556,7 +556,7 @@ def semantic_dedup(
     # ships BOTH full vectors across the Python boundary, and that
     # serialization dwarfs the interpreted-lambda cost. The kernel
     # pattern wins only where Python REPLACES heavy per-element JVM work
-    # (md5 in llm8.doc_embed_arrays), not where it re-hosts multiplies.
+    # (md5 in ann.doc_embed_arrays), not where it re-hosts multiplies.
     scored = (
         a.join(b, label_col)
         .filter(F.col("ia") < F.col("ib"))

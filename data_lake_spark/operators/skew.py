@@ -23,7 +23,7 @@ def key_skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
     uniform share (rows / distinct keys). skew_ratio ~1 = uniform;
     >> 1 = salt this key or rely on AQE skew-join splitting."""
     # counts feeds BOTH totals and the top-k probe; materialize it once
-    # (same pattern as textdedup/llm3) so the full-input groupBy shuffle
+    # (same pattern as textdedup and dedup.q_embedding_neardup) so the full-input groupBy shuffle
     # runs a single time instead of once per consumer.
     counts = df.groupBy(F.col(key).alias("key_value")).agg(
         F.count(F.lit(1)).alias("cnt")

@@ -276,7 +276,7 @@ def simhash16_expr(text_col: str = "text") -> Column:
     functions — one row per document, ZERO shuffle, where the explode
     form pushed tokens×16 vote rows through two hash aggregations. The
     vote sums are exact integer folds, so fingerprints are bit-identical
-    to the explode form and to the DuckDB oracle (queries/llm.py)."""
+    to the explode form and to the DuckDB oracle (queries/dedup.py)."""
 
     def votebits(h: Column) -> Column:
         return F.transform(
@@ -535,15 +535,11 @@ def exact_substr_spans(
     return spans_from_marked(marked, k, min_tokens, id_col)
 
 
-# Salt-bucket count for the two-level keeper min. Parameterised for
-# scale (env/conf), local default 16: the bound on one task's window
-# input for a hash h is |h| / _GRAM_SALTS-ish regardless of how hot a
-# boilerplate gram gets. 0 disables salting (the r10 single-window
-# form) — kept for A/B and the skew test's reference path.
-def _gram_salts() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_GRAM_SALTS", "16"))
+# Salt-bucket count for the two-level keeper min: the bound on one
+# task's input for a hash h is |h| / _GRAM_SALTS-ish regardless of how
+# hot a boilerplate gram gets. 0 selects the unsalted single-window
+# form, the reference path the skew test compares against.
+_GRAM_SALTS = 16
 
 
 def gram_keeper_marks(grams: DataFrame) -> DataFrame:
@@ -584,7 +580,7 @@ def gram_keeper_marks(grams: DataFrame) -> DataFrame:
     — the deliberate price of unconditional skew boundedness at scale.
     Identical output to the window form for every input
     (tests/test_exact_substr.py pins both directions)."""
-    salts = _gram_salts()
+    salts = _GRAM_SALTS
     if salts <= 0:  # reference path: the r10 single-window form
         wh = Window.partitionBy("h")
         return grams.withColumn("_keeper", F.min("enc").over(wh)).filter(

@@ -10,6 +10,7 @@ over this.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from importlib import import_module
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,151 +25,56 @@ class QuerySpec:
     doc: str = ""
 
 
+# Registry modules, one per query family. Registration order is this
+# tuple's order; full_registry() moves the driver window to the front.
+_MODULES = (
+    "relational",
+    "curation",
+    "dq_q",
+    "sketches",
+    "dedup",
+    "ann",
+    "media",
+    "text",
+    "mleval_q",
+    "mongo_q",
+    "quality_q",
+    "entity_q",
+    "temporal",
+    "train_q",
+    "tsmon_q",
+    "api_queries",
+    "sqlcompat_q",
+    "retrieval_q",
+    "corpus_q",
+    "scale_q",
+)
+
+
 def full_registry() -> dict[str, QuerySpec]:
-    from data_lake_spark.queries import (
-        api_queries,
-        corpus_q,
-        curation,
-        curation2,
-        dq_q,
-        entity_q,
-        llm,
-        llm2,
-        llm3,
-        llm4,
-        llm5,
-        llm6,
-        llm7,
-        llm8,
-        llm9,
-        llm10,
-        llm11,
-        llm12,
-        llm13,
-        mleval_q,
-        mongo_q,
-        quality_q,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        retrieval_q,
-        scale_q,
-        sketches,
-        sketches2,
-        sqlcompat_q,
-        temporal,
-        temporal2,
-        temporal3,
-        temporal4,
-        train_q,
-        tsmon_q,
-    )
-
+    """Every module's REGISTRY, driver-window names first. Raises on a
+    name registered twice or a window name that is not registered."""
     reg: dict[str, QuerySpec] = {}
-    reg.update(relational.REGISTRY)
-    reg.update(relational2.REGISTRY)
-    reg.update(relational3.REGISTRY)
-    reg.update(relational4.REGISTRY)
-    reg.update(relational5.REGISTRY)
-    reg.update(curation.REGISTRY)
-    reg.update(curation2.REGISTRY)
-    reg.update(dq_q.REGISTRY)
-    reg.update(sketches.REGISTRY)
-    reg.update(sketches2.REGISTRY)
-    reg.update(llm.REGISTRY)
-    reg.update(llm2.REGISTRY)
-    reg.update(llm3.REGISTRY)
-    reg.update(llm4.REGISTRY)
-    reg.update(llm5.REGISTRY)
-    reg.update(llm6.REGISTRY)
-    reg.update(llm7.REGISTRY)
-    reg.update(llm8.REGISTRY)
-    reg.update(llm9.REGISTRY)
-    reg.update(llm10.REGISTRY)
-    reg.update(llm11.REGISTRY)
-    reg.update(llm12.REGISTRY)
-    reg.update(llm13.REGISTRY)
-    reg.update(mleval_q.REGISTRY)
-    reg.update(mongo_q.REGISTRY)
-    reg.update(quality_q.REGISTRY)
-    reg.update(entity_q.REGISTRY)
-    reg.update(temporal.REGISTRY)
-    reg.update(temporal2.REGISTRY)
-    reg.update(temporal3.REGISTRY)
-    reg.update(temporal4.REGISTRY)
-    reg.update(train_q.REGISTRY)
-    reg.update(tsmon_q.REGISTRY)
-    reg.update(api_queries.REGISTRY)
-    reg.update(sqlcompat_q.REGISTRY)
-    reg.update(retrieval_q.REGISTRY)
-    reg.update(corpus_q.REGISTRY)
-    reg.update(scale_q.REGISTRY)
-
-    ordered: dict[str, QuerySpec] = {}
-    for name in _DRIVER_WINDOW_PRIORITY:
-        if name in reg:
-            ordered[name] = reg[name]
-    for name, spec in reg.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered
+    for mod in _MODULES:
+        for name, spec in import_module(f"{__name__}.{mod}").REGISTRY.items():
+            if name in reg:
+                raise ValueError(f"query {name!r} registered twice ({mod})")
+            reg[name] = spec
+    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in reg]
+    if missing:
+        raise ValueError(f"driver-window names not registered: {missing}")
+    return {**{n: reg[n] for n in _DRIVER_WINDOW_PRIORITY}, **reg}
 
 
-# The driver oracle-checks the first 50 registry entries per round. Window
-# history: r01 = first 50 in module order; r02 = the 45 then-unchecked + 2
-# fresh sketches + 3 sentinels; r03 = the 19 never-checked late-r02 additions
-# + 28 r01 regression canaries + 3 r02 sentinels; r04 = the 8 round-3
-# additions + 17 r01-stale + 25 oldest r02-only. r04 scored 49/50 green —
-# the one red was doc_embed, whose array<long> column broke the driver's
-# pandas canonicalizer (values were oracle-correct; output is now a CSV
-# string and the plan census forbids non-scalar oracle-paired output).
-#
-# r05–r07 each ran the rotation discipline (additions first, then the
-# stalest blocks oldest-first) and scored 100% green.
-#
-# Round 10 (this list; stale blocks recomputed this session from all
-# nine CORRECTNESS files — staleness histogram r06:44 / r07:49 /
-# r08:50 / r09:50, plus image_dhash_pairs whose only driver row,
-# r07, predates its oracle — never driver-green):
-# (a) round-10 additions — first driver row THIS round (appended
-#     as they land);
-# (a') image_dhash_pairs PINNED in the top 10 per the round-9
-#     verdict: its oracle MATCH is judge-verified twice but has no
-#     driver-green CORRECTNESS record;
-# (b) the 44 r06-stale rows in their CORRECTNESS_r06 window order
-#     (oldest verdicts in the registry);
-# (c) the 49 r07-stale rows in their CORRECTNESS_r07 window order —
-#     rank 50 cuts inside this block; each round-10 addition in (a)
-#     displaces one row off this tail into the ROUND 11 TODO.
-#
-# ROUND 11 TODO: recompute the stale blocks from all ten CORRECTNESS
-# files at round start (the standing discipline): round-11 additions
-# at the top as they land, then char_diversity (the round-10 addition
-# deferred by the exact-50 slot arithmetic below — still
-# never-driver-green, so it is the round-11 pin), then the r07-stale
-# rows in their CORRECTNESS_r07 window order, then r08-stale
-# oldest-first.
+# The external driver oracle-checks the first 50 registry entries. These
+# 100 names, in this order, are the registry's first 100 positions.
 _DRIVER_WINDOW_PRIORITY = [
-    # (a) round-10 additions — first driver row this round. The slot
-    # arithmetic is exact: 5 additions + the image_dhash_pairs pin +
-    # the 44 r06-stale rows = 50 = the window. char_diversity (the
-    # fourth scale_q addition, lowest stakes of the family) therefore
-    # waits at the head of block (c) — giving it a round-10 slot would
-    # leave one r06-stale row unre-checked, violating the round-9
-    # verdict's "nothing staler than r07" done-criterion.
     "mongo_dim_conform",
     "pack_efficiency",
-    # scale-posture family (queries/scale_q.py): Bloom-bit-array
-    # decontam prefilter (exact-confirmed — same oracle as decontam),
-    # blocked-pair census, Z-order skipping audit
     "decontam_bloom",
     "pair_space_audit",
     "zorder_layout",
-    # (a') the one never-driver-green row, pinned (round-9 verdict #1)
     "image_dhash_pairs",
-    # (b) the 44 r06-stale rows, CORRECTNESS_r06 window order
     "dup_histogram",
     "bpe_fertility",
     "exact_substr_pairs",
@@ -213,9 +119,6 @@ _DRIVER_WINDOW_PRIORITY = [
     "minhash_lsh",
     "mixture_weights",
     "multi_agg_attrs",
-    # (c) first the deferred round-10 addition (see the (a) note),
-    #     then the 49 r07-stale rows in CORRECTNESS_r07 window order —
-    #     rank 50 cuts exactly at this block's top
     "char_diversity",
     "pii_scan",
     "url_domains",

@@ -1,7 +1,7 @@
-"""Training-data curation queries: deterministic sampling, dataset
-splitting, repetition-based quality filtering, and benchmark
-decontamination — the corpus-preparation stages of an LLM data pipeline,
-beyond the reference surface (BASELINE.json north star).
+"""Training-data curation queries: deterministic sampling (uniform and
+length-weighted), dataset splitting, repetition-based quality filtering,
+and benchmark decontamination — the corpus-preparation stages of an LLM
+data pipeline, beyond the reference surface (BASELINE.json north star).
 
 Determinism across engines AND cluster sizes is the design center:
 
@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from data_lake_spark.catalog import load_table
 from data_lake_spark.queries import QuerySpec
+
+REGISTRY: dict[str, QuerySpec] = {}
 
 # --- deterministic per-document uniform u16 from md5 ----------------------
 
@@ -390,33 +392,30 @@ FROM bg JOIN corpus USING (b)
 GROUP BY 1 ORDER BY 1
 """
 
-
-REGISTRY: dict[str, QuerySpec] = {
-    "bigram_lm_score": QuerySpec(
-        q_bigram_lm_score, ORACLE_BIGRAM_LM,
-        "corpus-bigram-frequency LM quality score per document",
-    ),
-    "hash_sample": QuerySpec(
-        q_hash_sample, ORACLE_HASH_SAMPLE,
-        "deterministic md5-keyed Bernoulli document sample",
-    ),
-    "train_split": QuerySpec(
-        q_train_split, ORACLE_TRAIN_SPLIT,
-        "hash-based 80/10/10 split with per-split token budgets",
-    ),
-    "repetition_stats": QuerySpec(
-        q_repetition_stats, ORACLE_REPETITION_STATS,
-        "Gopher-style repetition quality signals",
-    ),
-    "decontam": QuerySpec(
-        q_decontam, ORACLE_DECONTAM,
-        "benchmark n-gram overlap decontamination scan",
-    ),
-    "mixture_weights": QuerySpec(
-        q_mixture_weights, ORACLE_MIXTURE_WEIGHTS,
-        "language-balanced deterministic mixture subsample",
-    ),
-}
+REGISTRY["bigram_lm_score"] = QuerySpec(
+    q_bigram_lm_score, ORACLE_BIGRAM_LM,
+    "corpus-bigram-frequency LM quality score per document",
+)
+REGISTRY["hash_sample"] = QuerySpec(
+    q_hash_sample, ORACLE_HASH_SAMPLE,
+    "deterministic md5-keyed Bernoulli document sample",
+)
+REGISTRY["train_split"] = QuerySpec(
+    q_train_split, ORACLE_TRAIN_SPLIT,
+    "hash-based 80/10/10 split with per-split token budgets",
+)
+REGISTRY["repetition_stats"] = QuerySpec(
+    q_repetition_stats, ORACLE_REPETITION_STATS,
+    "Gopher-style repetition quality signals",
+)
+REGISTRY["decontam"] = QuerySpec(
+    q_decontam, ORACLE_DECONTAM,
+    "benchmark n-gram overlap decontamination scan",
+)
+REGISTRY["mixture_weights"] = QuerySpec(
+    q_mixture_weights, ORACLE_MIXTURE_WEIGHTS,
+    "language-balanced deterministic mixture subsample",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -529,4 +528,59 @@ REGISTRY["temp_weights"] = QuerySpec(
     "temperature-0.5 mixture weights: per-language sampling weight "
     "proportional to sqrt(token share), integer-exact with one "
     "IEEE-correctly-rounded sqrt step",
+)
+
+# p = min(1, n_chars / _FULL_KEEP_CHARS), evaluated in u16 integer space:
+# keep iff u16(doc_id) < min(65536, n_chars * 65536 div _FULL_KEEP_CHARS)
+_FULL_KEEP_CHARS = 4000
+
+
+def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-weighted Bernoulli sample, reported per language: document
+    and char counts, total vs sampled. The keep decision is a pure
+    integer function of (doc_id, n_chars) — map-only scan, one dim-sized
+    aggregate; no rand(), no seed plumbing, no driver state."""
+    docs = load_table(spark, sf_dir, "documents")
+    # integer `div`, not floor(double /): both engines then compute the
+    # identical exact integer quotient
+    cut = F.least(
+        F.lit(65536).cast("long"),
+        F.expr(f"CAST(n_chars AS BIGINT) * 65536 div {_FULL_KEEP_CHARS}"),
+    )
+    keep = (doc_u16() < cut).cast("long")
+    return (
+        docs.withColumn("keep", keep)
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("docs_total"),
+            F.sum("keep").alias("docs_sampled"),
+            F.sum("n_chars").cast("long").alias("chars_total"),
+            F.sum(F.col("keep") * F.col("n_chars")).cast("long").alias(
+                "chars_sampled"
+            ),
+        )
+        .orderBy("lang")
+    )
+
+
+ORACLE_WEIGHTED_SAMPLE = f"""
+WITH k AS (
+  SELECT lang, n_chars,
+         CASE WHEN {_oracle_u16('doc_id')} <
+                   LEAST(65536, (CAST(n_chars AS BIGINT) * 65536) // {_FULL_KEEP_CHARS})
+              THEN 1 ELSE 0 END AS keep
+  FROM documents
+)
+SELECT lang,
+       COUNT(*) AS docs_total,
+       CAST(SUM(keep) AS BIGINT) AS docs_sampled,
+       CAST(SUM(n_chars) AS BIGINT) AS chars_total,
+       CAST(SUM(keep * n_chars) AS BIGINT) AS chars_sampled
+FROM k GROUP BY 1 ORDER BY 1
+"""
+
+REGISTRY["weighted_sample"] = QuerySpec(
+    q_weighted_sample,
+    ORACLE_WEIGHTED_SAMPLE,
+    "length-weighted deterministic Bernoulli sample per language",
 )

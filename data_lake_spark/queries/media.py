@@ -1,13 +1,15 @@
-"""Training-data-pipeline queries, part 13 (round 8): perceptual audio
-dedup over the REAL WAV decode path, and perceptual video dedup over
-REAL RIFF/AVI frame extraction.
+"""Multimodal queries over the binary media synthesized from
+``documents``: decode/frame-sample plumbing and perceptual near-dup
+detection for images (dHash), audio (envelope fingerprint) and video
+(per-frame dHash), with connected-components keeper assignment and
+stored-hash variants.
 
-Beyond the reference surface (BASELINE.json north_star "multimodal
-columns"). Completes the near-dup family across every modality — text
-(ExactSubstr/MinHash/SimHash), images (dHash), audio (envelope
-fingerprint), video (per-frame dHash) — on the ONE shared topology:
-single Arrow hash pass → banded inverted-index candidates → exact
-refine, never all-pairs.
+Every modality runs the one shared topology: a single Arrow hash pass
+(real dependency-free BMP / RIFF-PCM / RIFF-AVI decode) → banded
+inverted-index candidates → exact Hamming refine, never all-pairs. The
+synthesis is deterministic from text, so each DuckDB oracle recomputes
+the fingerprint definition from the text bytes and the pairs are
+cross-engine checked.
 """
 
 from __future__ import annotations
@@ -16,14 +18,300 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_lake_spark.catalog import load_table
-from data_lake_spark.functions.exact import (
-    micro_share_sql,
-    oracle_micro_share_sql,
-)
+from data_lake_spark.operators.multimodal import decode_media, documents_as_media
 from data_lake_spark.operators.partitioning import decode_spread
 from data_lake_spark.queries import QuerySpec
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+# ---------------------------------------------------------------------------
+# multimodal decode + frame sampling (stubbed codec, real plumbing)
+# ---------------------------------------------------------------------------
+
+# hex-nibble value, expressible in both engines: strpos over the alphabet
+_HEXV = "(STRPOS('0123456789abcdef', SUBSTR(h, {i}, 1)) - 1)"
+
+
+def _byte_sql(pos: int) -> str:
+    """Integer value of sha256-digest byte ``pos`` (0-based) from hex text."""
+    hi = _HEXV.format(i=2 * pos + 1)
+    lo = _HEXV.format(i=2 * pos + 2)
+    return f"(16 * {hi} + {lo})"
+
+
+def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal decode pipeline over opaque binary payloads: documents
+    adapted to (media_id, kind, content binary, meta struct), decoded via
+    the mapInPandas Arrow stage (deterministic digest-based stub standing
+    in for PIL/ffmpeg). The oracle recomputes the stub's digest arithmetic
+    in SQL — the Python batch stage is fully checked, not rows-only."""
+    docs = load_table(spark, sf_dir, "documents")
+    dec = decode_media(documents_as_media(docs), fake=True)
+    return dec.select(
+        "media_id",
+        "kind",
+        "n_bytes",
+        "sha256",
+        F.col("width").cast("long").alias("width"),
+        F.col("height").cast("long").alias("height"),
+        F.col("n_frames").cast("long").alias("n_frames"),
+    ).orderBy("media_id")
+
+
+ORACLE_MULTIMODAL_DECODE = f"""
+WITH media AS (
+  SELECT doc_id AS media_id,
+         CASE WHEN doc_id % 3 = 0 THEN 'video'
+              WHEN doc_id % 3 = 1 THEN 'image'
+              ELSE 'audio' END AS kind,
+         CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
+         SHA256(text) AS h
+  FROM documents
+)
+SELECT media_id, kind, n_bytes, h AS sha256,
+       CAST(64 + {_byte_sql(0)} % 192 AS BIGINT) AS width,
+       CAST(64 + {_byte_sql(1)} % 192 AS BIGINT) AS height,
+       CAST(CASE WHEN kind = 'video' THEN 1 + {_byte_sql(2)} % 16
+                 ELSE 1 END AS BIGINT) AS n_frames
+FROM media ORDER BY 1
+"""
+
+
+def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video frame-sampling plumbing: decode, then explode frame indices
+    0..n_frames-1 keeping every 4th (sequence + explode — built-ins; the
+    stub stands in for the frame grab)."""
+    from data_lake_spark.operators.multimodal import frame_sample
+
+    docs = load_table(spark, sf_dir, "documents")
+    dec = decode_media(documents_as_media(docs), fake=True)
+    return (
+        frame_sample(dec, every_n=4)
+        .select("media_id", F.col("frame_idx").cast("long").alias("frame_idx"))
+        .orderBy("media_id", "frame_idx")
+    )
+
+
+ORACLE_FRAME_SAMPLE = f"""
+WITH vids AS (
+  SELECT doc_id AS media_id, SHA256(text) AS h
+  FROM documents WHERE doc_id % 3 = 0
+),
+frames AS (
+  SELECT media_id,
+         UNNEST(GENERATE_SERIES(0, {_byte_sql(2)} % 16)) AS frame_idx
+  FROM vids
+)
+SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx
+FROM frames WHERE frame_idx % 4 = 0
+ORDER BY 1, 2
+"""
+
+REGISTRY["multimodal_decode"] = QuerySpec(
+    q_multimodal_decode, ORACLE_MULTIMODAL_DECODE,
+    "binary decode via mapInPandas, digest-checked",
+)
+REGISTRY["frame_sample"] = QuerySpec(
+    q_frame_sample, ORACLE_FRAME_SAMPLE, "video frame sampling plumbing"
+)
+
+
+# ---------------------------------------------------------------------------
+# image_dhash_pairs — perceptual near-dup pairs over the image column
+# ---------------------------------------------------------------------------
+
+
+def q_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual image dedup end-to-end (operators/imagehash.py):
+    documents synthesized into VALID 16×16 BMPs (pure JVM byte concat —
+    near-identical texts become near-identical images), REAL pixel
+    decode + integer dHash in one Arrow pass, 8-band inverted-index
+    candidates (exhaustive for Hamming ≤ 7), exact bit_count refine.
+    Per-pair rollup to (media_a, dup-of counts) keeps the output stable.
+
+    FULLY oracle-paired as of r8 (was the registry's one rows-only
+    row): the synthesized BMP is deterministic from the text (first
+    768 ASCII bytes as bottom-up BGR pixels, space-padded), so DuckDB
+    recomputes the dHash DEFINITION — integer Rec.601 grayscale,
+    area-average 8×9 cells, gradient bits — straight from the text.
+    The bytes→BMP→pixels equivalence (that the Arrow kernel's decode
+    of the synthesized container yields exactly those pixels) is what
+    tests/test_imagehash.py + the property suite pin."""
+    from data_lake_spark.operators.imagehash import (
+        bmp_from_text_col,
+        dhash_table,
+        hamming_pairs,
+    )
+
+    docs = decode_spread(
+        spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    pairs = hamming_pairs(dhash_table(bmp_from_text_col(docs)), max_hamming=6)
+    return (
+        pairs.groupBy("media_a")
+        .agg(
+            F.count(F.lit(1)).alias("n_dups"),
+            F.min("media_b").alias("first_dup"),
+            F.min("hamming").alias("min_hamming"),
+        )
+        .orderBy("media_a")
+    )
+
+
+# dHash-family candidate tail shared by the image and audio oracles:
+# 8-bit bands, the <=64 hot-bucket cap, band-collision candidates,
+# exact Hamming distance per candidate pair.
+_BAND_HAM_SQL = """bandvals AS (
+  SELECT doc_id, k // 8 AS band,
+         CAST(SUM(bit * (1 << CAST(k % 8 AS INT))) AS BIGINT) AS val
+  FROM bits GROUP BY 1, 2
+),
+ok_buckets AS (
+  SELECT band, val FROM bandvals GROUP BY 1, 2 HAVING COUNT(*) <= 64
+),
+cands AS (
+  SELECT DISTINCT LEAST(a.doc_id, b.doc_id) AS media_a,
+                  GREATEST(a.doc_id, b.doc_id) AS media_b
+  FROM bandvals a
+  JOIN ok_buckets o ON a.band = o.band AND a.val = o.val
+  JOIN bandvals b ON b.band = a.band AND b.val = a.val
+                 AND a.doc_id <> b.doc_id
+),
+ham AS (
+  SELECT c.media_a, c.media_b,
+         CAST(SUM(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS BIGINT)
+           AS hamming
+  FROM cands c
+  JOIN bits x ON x.doc_id = c.media_a
+  JOIN bits y ON y.doc_id = c.media_b AND y.k = x.k
+  GROUP BY 1, 2
+)"""
+
+# The oracle mirrors the whole pipeline from the text bytes the
+# synthesis is defined over: byte j of the 16×16 bottom-up BGR pixel
+# array maps to top-down (r = 15 − j div 48, c = (j mod 48) div 3,
+# channel = j mod 3); grayscale is integer Rec.601; the 8×9
+# area-average cells follow the integer boundaries ((c·16) div 9 —
+# widths 1,2,2,2,1,2,2,2,2 hard-coded via colmap); then gradient
+# bits, 8-bit banding, the ≤64 hot-bucket cap, exact Hamming ≤ 6.
+# The CTE list is exposed separately (IMG_PAIR_CORE_SQL) so the keeper
+# query (dedup_images_keepers) can extend it with the recursive
+# connected-components tail.
+IMG_PAIR_CORE_SQL = f"""docs_ascii AS (
+  -- mirror of operators.imagehash.ascii_text: the synthesis deletes
+  -- non-ASCII codepoints before slicing, so codepoints == bytes
+  SELECT doc_id, REGEXP_REPLACE(text, '[^\\x00-\\x7f]', '', 'g') AS text
+  FROM documents
+),
+bytes AS (
+  SELECT d.doc_id, t.j,
+         CASE WHEN t.j + 1 <= LENGTH(d.text)
+              THEN ORD(SUBSTRING(d.text, CAST(t.j + 1 AS INT), 1))
+              ELSE 32 END AS v
+  FROM docs_ascii d, GENERATE_SERIES(0, 767) AS t(j)
+),
+gray AS (
+  SELECT doc_id, 15 - (j // 48) AS r, (j % 48) // 3 AS c,
+         CAST((299 * SUM(CASE WHEN j % 3 = 2 THEN v END)
+             + 587 * SUM(CASE WHEN j % 3 = 1 THEN v END)
+             + 114 * SUM(CASE WHEN j % 3 = 0 THEN v END)) // 1000 AS BIGINT)
+           AS g
+  FROM bytes GROUP BY 1, 2, 3
+),
+colmap(pc, cc, wdt) AS (VALUES
+  (0,0,1),(1,1,2),(2,1,2),(3,2,2),(4,2,2),(5,3,2),(6,3,2),(7,4,1),
+  (8,5,2),(9,5,2),(10,6,2),(11,6,2),(12,7,2),(13,7,2),(14,8,2),(15,8,2)),
+cells AS (
+  SELECT doc_id, r // 2 AS rc, m.cc,
+         CAST(SUM(g) // (2 * m.wdt) AS BIGINT) AS cell
+  FROM gray JOIN colmap m ON gray.c = m.pc
+  GROUP BY doc_id, r // 2, m.cc, m.wdt
+),
+bits AS (
+  SELECT a.doc_id, a.rc * 8 + a.cc AS k,
+         CASE WHEN a.cell > b.cell THEN 1 ELSE 0 END AS bit
+  FROM cells a JOIN cells b ON a.doc_id = b.doc_id AND a.rc = b.rc
+            AND b.cc = a.cc + 1
+  WHERE a.cc < 8
+),
+{_BAND_HAM_SQL}"""
+
+ORACLE_IMAGE_DHASH_PAIRS = f"""
+WITH {IMG_PAIR_CORE_SQL}
+SELECT media_a, CAST(COUNT(*) AS BIGINT) AS n_dups,
+       MIN(media_b) AS first_dup, MIN(hamming) AS min_hamming
+FROM ham WHERE hamming <= 6 GROUP BY 1 ORDER BY media_a
+"""
+
+REGISTRY["image_dhash_pairs"] = QuerySpec(
+    q_image_dhash_pairs,
+    ORACLE_IMAGE_DHASH_PAIRS,
+    "perceptual image dedup: real BMP pixel decode + integer dHash in "
+    "one Arrow pass, 8-band Hamming LSH candidates, bit_count refine — "
+    "fully oracle-paired (the synthesis is deterministic from text, so "
+    "SQL recomputes the dHash definition; container decode pytest-pinned)",
+)
+
+
+# ---------------------------------------------------------------------------
+# image_dhash_pairs_stored — the image family served from a persisted
+# hash index (the video_frame_pairs_stored argument, one modality down)
+# ---------------------------------------------------------------------------
+
+
+def stored_image_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from data_lake_spark.artifacts import stored_artifact
+    from data_lake_spark.operators.imagehash import (
+        bmp_from_text_col,
+        dhash_table,
+    )
+
+    def build() -> DataFrame:
+        docs = decode_spread(
+            spark,
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        )
+        return dhash_table(bmp_from_text_col(docs)).filter(
+            F.col("dhash").isNotNull()
+        )
+
+    # version "1" = the 16x16 Rec.601 + 8x9-cell dHash definition
+    return stored_artifact(
+        spark, sf_dir, "image_dhash", ["documents"], build, version="1"
+    )
+
+
+def q_image_dhash_pairs_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image near-dup pairs served from the persisted (media_id, dhash)
+    index: the Arrow decode ran once at ingest (the streaming twin is
+    start_dhash_index_ingest's at-rest format); every screen after that
+    is pure JVM banding + refine — zero decode stages in-plan, same
+    oracle verbatim."""
+    from data_lake_spark.operators.imagehash import hamming_pairs
+
+    pairs = hamming_pairs(
+        stored_image_hashes(spark, sf_dir), max_hamming=6, checkpoint=False
+    )
+    return (
+        pairs.groupBy("media_a")
+        .agg(
+            F.count(F.lit(1)).alias("n_dups"),
+            F.min("media_b").alias("first_dup"),
+            F.min("hamming").alias("min_hamming"),
+        )
+        .orderBy("media_a")
+    )
+
+
+REGISTRY["image_dhash_pairs_stored"] = QuerySpec(
+    q_image_dhash_pairs_stored,
+    ORACLE_IMAGE_DHASH_PAIRS,
+    "image near-dup pairs served from the PERSISTED dHash index: pure "
+    "JVM banding + refine, zero Arrow decode stages in-plan (the "
+    "stored-artifact serving twin of image_dhash_pairs, same oracle "
+    "verbatim)",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +364,7 @@ def q_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation, exact Hamming refine, rollup — from the text bytes the
 # synthesis is defined over. Constants locked to the synthesis/query:
 # 1040 samples, 16-sample windows, 8 bands, cap 64, max_hamming 6.
-AUD_PAIR_CORE_SQL = """docs_ascii AS (
+AUD_PAIR_CORE_SQL = f"""docs_ascii AS (
   -- mirror of operators.imagehash.ascii_text: the synthesis deletes
   -- non-ASCII codepoints before slicing, so codepoints == bytes
   SELECT doc_id, REGEXP_REPLACE(text, '[^\\x00-\\x7f]', '', 'g') AS text
@@ -99,31 +387,7 @@ bits AS (
   FROM wins a JOIN wins b ON a.doc_id = b.doc_id AND b.w = a.w + 1
   WHERE a.w < 64
 ),
-bandvals AS (
-  SELECT doc_id, k // 8 AS band,
-         CAST(SUM(bit * (1 << CAST(k % 8 AS INT))) AS BIGINT) AS val
-  FROM bits GROUP BY 1, 2
-),
-ok_buckets AS (
-  SELECT band, val FROM bandvals GROUP BY 1, 2 HAVING COUNT(*) <= 64
-),
-cands AS (
-  SELECT DISTINCT LEAST(a.doc_id, b.doc_id) AS media_a,
-                  GREATEST(a.doc_id, b.doc_id) AS media_b
-  FROM bandvals a
-  JOIN ok_buckets o ON a.band = o.band AND a.val = o.val
-  JOIN bandvals b ON b.band = a.band AND b.val = a.val
-                 AND a.doc_id <> b.doc_id
-),
-ham AS (
-  SELECT c.media_a, c.media_b,
-         CAST(SUM(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS BIGINT)
-           AS hamming
-  FROM cands c
-  JOIN bits x ON x.doc_id = c.media_a
-  JOIN bits y ON y.doc_id = c.media_b AND y.k = x.k
-  GROUP BY 1, 2
-)"""
+{_BAND_HAM_SQL}"""
 
 ORACLE_AUDIO_FP_PAIRS = f"""
 WITH {AUD_PAIR_CORE_SQL}
@@ -366,7 +630,7 @@ def stored_video_frame_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dhash").isNotNull()
         )
 
-    # builder-format version: "1" = image-kernel dHash over 16x16
+    # artifact-format version: "1" = image-kernel dHash over 16x16
     # 24bpp DIB frames (bump if the hash definition changes — the data
     # fingerprint alone cannot see code drift)
     return stored_artifact(
@@ -649,7 +913,6 @@ REGISTRY["dedup_audio_keepers"] = QuerySpec(
 
 
 def _img_keepers_oracle() -> str:
-    from data_lake_spark.queries.llm11 import IMG_PAIR_CORE_SQL
 
     return f"WITH RECURSIVE {IMG_PAIR_CORE_SQL}{_CC_TAIL_SQL}"
 
@@ -660,169 +923,6 @@ REGISTRY["dedup_images_keepers"] = QuerySpec(
     "image dedup keeper assignment: dHash pairs -> connected "
     "components -> (media_id, keeper, is_dup) — the CC label set "
     "itself hash-checked via a recursive-closure oracle",
-)
-
-
-# ---------------------------------------------------------------------------
-# domain_doc_quality — the blocklist DECISION table (url_domains' sequel)
-# ---------------------------------------------------------------------------
-#
-# url_domains counts links; a C4-style blocklist decision also needs to
-# know WHAT is linking: a domain cited by many short low-content docs is
-# spam-shaped, one cited by long documents is citation-shaped. Per
-# domain: link count, distinct docs, mean linking-doc length (floored
-# integer), and the domain's micro-share of all corpus links — all
-# integer-exact, one extract+explode scan, one domain-keyed shuffle with
-# map-side combine (the host-sized key space of url_domains).
-
-_URL_PAT_Q = r"https?://([A-Za-z0-9.-]+)"
-_URL_SALT_Q = (
-    "text"
-    " || CASE WHEN doc_id % 2 = 0 THEN ' see https://site'"
-    " || CAST(doc_id % 40 AS VARCHAR) || '.example.org/p/'"
-    " || CAST(doc_id AS VARCHAR) ELSE '' END"
-    " || CASE WHEN doc_id % 9 = 0 THEN ' and http://mirror'"
-    " || CAST(doc_id % 7 AS VARCHAR) || '.example.net/x' ELSE '' END"
-)
-
-
-def q_domain_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.expr(_URL_SALT_Q.replace("VARCHAR", "STRING")).alias("salted"),
-    )
-    hosts = docs.select(
-        "doc_id",
-        "n_chars",
-        F.explode(
-            F.regexp_extract_all("salted", F.lit(_URL_PAT_Q), F.lit(1))
-        ).alias("domain"),
-    )
-    per_dom = hosts.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_links"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
-    w_all = Window.partitionBy(F.lit(0))
-    return (
-        per_dom.withColumn("total_links", F.sum("n_links").over(w_all))
-        .select(
-            "domain",
-            "n_links",
-            "n_docs",
-            F.expr("sum_chars div n_links").alias("avg_link_doc_chars"),
-            F.expr(micro_share_sql("n_links", "total_links")).alias(
-                "link_share_micro"
-            ),
-        )
-        .orderBy(F.col("n_links").desc(), "domain")
-    )
-
-
-ORACLE_DOMAIN_DOC_QUALITY = f"""
-WITH salted AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-         {_URL_SALT_Q} AS salted
-  FROM documents
-),
-hosts AS (
-  SELECT doc_id, n_chars,
-         UNNEST(REGEXP_EXTRACT_ALL(salted, 'https?://([A-Za-z0-9.-]+)', 1))
-           AS domain
-  FROM salted
-),
-per_dom AS (
-  SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_links,
-         CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-  FROM hosts GROUP BY 1
-),
-tot AS (
-  SELECT *, CAST(SUM(n_links) OVER () AS BIGINT) AS total_links
-  FROM per_dom
-)
-SELECT domain, n_links, n_docs,
-       CAST(sum_chars // n_links AS BIGINT) AS avg_link_doc_chars,
-       CAST({oracle_micro_share_sql("n_links", "total_links")} AS BIGINT)
-         AS link_share_micro
-FROM tot ORDER BY n_links DESC, domain
-"""
-
-REGISTRY["domain_doc_quality"] = QuerySpec(
-    q_domain_doc_quality,
-    ORACLE_DOMAIN_DOC_QUALITY,
-    "per-domain blocklist decision table: link census + mean "
-    "linking-doc length + link micro-share, integer-exact — one "
-    "extract+explode scan, one domain-keyed shuffle",
-)
-
-
-# ---------------------------------------------------------------------------
-# dup_rate_by_source — what dedup will buy, per source, before running it
-# ---------------------------------------------------------------------------
-#
-# The first question a curation pipeline asks of a new source: how much
-# of it is copies? Exact content-hash families per source (md5 of the
-# text — the exact_dedup definition), rolled up to docs / distinct
-# texts / redundant docs / a floored micro dup-rate. One scan, one
-# (source, hash)-keyed aggregate that map-side-combines, then a
-# source-sized rollup — scan-linear at any corpus size, and the
-# decision number (keep the source? dedup it first?) is exact.
-
-
-def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", F.md5(F.col("text")).alias("h")
-    )
-    fam = docs.groupBy("source", "h").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    return (
-        fam.groupBy("source")
-        .agg(
-            F.sum("n").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_distinct_texts"),
-            (F.sum("n") - F.count(F.lit(1))).alias("n_redundant"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_distinct_texts",
-            "n_redundant",
-            F.expr(micro_share_sql("n_redundant", "n_docs")).alias(
-                "dup_rate_micro"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE_DUP_RATE_BY_SOURCE = f"""
-WITH fam AS (
-  SELECT source, MD5(text) AS h, CAST(COUNT(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1, 2
-),
-per_source AS (
-  SELECT source, CAST(SUM(n) AS BIGINT) AS n_docs,
-         CAST(COUNT(*) AS BIGINT) AS n_distinct_texts,
-         CAST(SUM(n) - COUNT(*) AS BIGINT) AS n_redundant
-  FROM fam GROUP BY 1
-)
-SELECT source, n_docs, n_distinct_texts, n_redundant,
-       CAST({oracle_micro_share_sql("n_redundant", "n_docs")} AS BIGINT)
-         AS dup_rate_micro
-FROM per_source ORDER BY source
-"""
-
-REGISTRY["dup_rate_by_source"] = QuerySpec(
-    q_dup_rate_by_source,
-    ORACLE_DUP_RATE_BY_SOURCE,
-    "per-source exact-copy census: docs / distinct texts / redundant "
-    "docs / floored micro dup-rate — the what-will-dedup-buy audit, "
-    "one scan + one map-side-combinable (source, hash) aggregate",
 )
 
 
@@ -896,7 +996,6 @@ def q_dedup_images_keepers_stored(
     media survive as their own keepers."""
     from data_lake_spark.operators.imagehash import hamming_pairs
     from data_lake_spark.operators.videofp import keepers_from_pairs
-    from data_lake_spark.queries.llm11 import stored_image_hashes
 
     pairs = hamming_pairs(
         stored_image_hashes(spark, sf_dir), max_hamming=6, checkpoint=False

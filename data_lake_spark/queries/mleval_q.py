@@ -1,13 +1,13 @@
 """In-engine model evaluation: the PR/F1 threshold curve and the
 quality-vs-quantity retention curve — closing the classifier loop that
-train_q (fit) and llm4.classifier_filter (infer) open. A curation run
+train_q (fit) and text.classifier_filter (infer) open. A curation run
 publishes these two tables to pick its operating point; computing them
 in-engine means the 100 TB corpus is scanned ONCE into a ~17-row bin
 histogram and every threshold's confusion matrix falls out of suffix
 sums over that dim-sized frame (the histogram-based PR-curve shape —
 never one corpus pass per threshold).
 
-Exactness: the score is llm4's integer linear model verbatim
+Exactness: the score is classifier_filter's integer linear model verbatim
 (3·distinct_milli + 2·len_cap); bins are score div 250; every rate is
 a floored micro-share; denominators are guarded (a degenerate corpus
 with no positive labels reports 0, not a divide-by-zero job failure —
@@ -38,7 +38,7 @@ _BIN = 250  # score bin width; score range is ~0..4024 → ≤17 bins
 
 def _binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bin, n, n_pos, n_tok): the one corpus pass both curves read.
-    Label = doc is English (the train_q convention); score = the llm4
+    Label = doc is English (the train_q convention); score = the classifier_filter
     integer linear model."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -233,7 +233,7 @@ REGISTRY: dict[str, QuerySpec] = {
 
 
 def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion matrix of llm.q_lang_id's stopword-profile classifier
+    """Confusion matrix of text.q_lang_id's stopword-profile classifier
     vs the labeled ``lang`` column, with integer-exact per-cell rates:
     recall_micro = n / (gold-label row total), precision_micro =
     n / (predicted-label column total) — the table a pipeline reads
@@ -246,7 +246,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell frame (≤ |langs|² rows — bounded by construction). Rates are
     floored micro-shares via the digit-split division. 1 corpus
     shuffle."""
-    from data_lake_spark.queries.llm import q_lang_id
+    from data_lake_spark.queries.text import q_lang_id
 
     cells = (
         q_lang_id(spark, sf_dir)
@@ -276,7 +276,7 @@ _PREC = oracle_micro_share_sql("n", "pred_tot")
 
 
 def _oracle_lang_confusion() -> str:
-    from data_lake_spark.queries.llm import ORACLE_LANG_ID
+    from data_lake_spark.queries.text import ORACLE_LANG_ID
 
     return f"""
 WITH lang_pred AS ({ORACLE_LANG_ID}),

@@ -6,7 +6,7 @@ serve aggregates — e.g. `/root/reference/src/lambdas/earnings_analytics/
 lambda_function.py`); a training-data engine also has to ANSWER
 retrieval questions over the corpus it curates: "which documents match
 this query" (lexical BM25), "which match semantically" (the hashed-
-embedding cosine stack from queries/llm8.py), and "which are most
+embedding cosine stack from queries/ann.py), and "which are most
 central in the duplication graph" (PageRank over the shingle-candidate
 edges — a centrality prior for keeper selection). All three are exact
 by construction — integer fixed-point arithmetic throughout, the
@@ -48,7 +48,7 @@ from data_lake_spark.session import overlap
 # clears to (2N−2df+1)·SCALE div (2df+1). Floor-per-term then integer
 # SUM — the deterministic-quantize-then-sum recipe of
 # functions/exact.py, and transcendental-free (engines disagree in the
-# last ULP of ln; they cannot disagree about integer div — the llm3.py
+# last ULP of ln; they cannot disagree about integer div — the queries/text.py
 # vocab-pruning rule).
 #
 # Overflow headroom: A-form keeps the normalizer ≤ 22·dl·A·10⁴ (corpus
@@ -189,7 +189,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 3 documents: a lexical BM25 ranking (query terms = the query
     doc's distinct tokens, candidates generated by an inverted-index
     token join) and a semantic ranking (cosine over the in-engine
-    hashed embeddings, queries/llm8.py). rrf = Σ_list 10^6 div
+    hashed embeddings, queries/ann.py). rrf = Σ_list 10^6 div
     (60 + rank), absent-from-list contributes 0 — integer arithmetic,
     exact on both engines.
 
@@ -198,7 +198,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine side broadcasts 3 query vectors and streams the corpus; the
     fusion full-outer-joins two ≤TOPN·|Q| rank lists — dim-sized."""
     from data_lake_spark.operators.similarity import cosine_topk
-    from data_lake_spark.queries.llm8 import doc_embed_arrays
+    from data_lake_spark.queries.ann import doc_embed_arrays
 
     docs = load_table(spark, sf_dir, "documents")
     toks_arr = F.split(F.col("text"), " ")
@@ -293,7 +293,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "cand_id", "rank_lex")
     )
 
-    # --- semantic side: hashed-embedding cosine top-N (llm8 stack) ----
+    # --- semantic side: hashed-embedding cosine top-N (ann.py doc_embed stack) ----
     # the corpus ships as one parquet row group, so the CPU-bound md5
     # token hashing needs the same narrow spread q_doc_embed documents
     # (vecs built above so its materialization overlaps tf's)
@@ -338,7 +338,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PS = "1000000000000.0"  # the llm8/similarity quantized-dot scale
+_PS = "1000000000000.0"  # the ann/similarity quantized-dot scale
 
 # Lexical CTE chain (mirrors the q_rrf_fusion lexical side textually).
 _SQL_LEX = f"""
@@ -381,7 +381,7 @@ lex AS (
   FROM lex_scores QUALIFY rank_lex <= {_TOPN}
 )"""
 
-# Semantic CTE chain: the llm8 hashed-embedding vectors (imported
+# Semantic CTE chain: the ann.py hashed-embedding vectors (imported
 # textually so the recipes can never drift apart) + the quantized
 # cosine, per-query rank capped at _TOPN.
 _SQL_SEM = f"""
@@ -410,7 +410,7 @@ sem AS (
 
 
 def _oracle_rrf() -> str:
-    from data_lake_spark.queries.llm8 import _SQL_TOK_EMBED
+    from data_lake_spark.queries.ann import _SQL_TOK_EMBED
 
     return f"""
 WITH {_SQL_LEX},
@@ -620,7 +620,7 @@ def q_central_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_central_keeper() -> str:
-    from data_lake_spark.queries.llm2 import _SHINGLES_SQL
+    from data_lake_spark.queries.dedup import _SHINGLES_SQL
 
     prs = ",".join(_pr_iter_sql(i) for i in range(1, _PR_ITER + 1))
     return f"""

@@ -4,7 +4,7 @@ counts — the two rollups an operations dashboard runs continuously.
 
 Scale discipline (repo policy): every window here is CALENDAR-BOUNDED —
 the series is aggregated to one row per day first, so window input is
-days, never data volume (the temporal4 gap-fill argument). The sliding
+days, never data volume (the temporal.gap_fill_interp argument). The sliding
 distinct additionally demonstrates the PRODUCTION sketch shape: one
 fixed-size HLL partial per day, each trailing window merging 7 partials
 — re-scanning no events — which is how a 100 TB stream serves arbitrary

@@ -16,21 +16,16 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app_name: str = "data_lake_spark",
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "data_lake_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
     On a real cluster the master/memory settings come from spark-submit;
     everything here is master-agnostic except the local[] fallback.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-        )
+    shuffle_partitions = int(
+        os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -72,7 +67,7 @@ def get_spark(
         # (measured: doc_embed 6.1 s single-task -> 15.9 s with 10 fake
         # splits). CPU-heavy text queries that need spread on this data
         # do ONE narrow (id, text) round-robin exchange before the
-        # expensive projection (queries/llm8.py); on a real cluster the
+        # expensive projection (queries/ann.py); on a real cluster the
         # writer's 128 MB row groups make file splits do this for free.
         .config("spark.ui.enabled", "false")
     )
@@ -81,9 +76,6 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g")
         )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

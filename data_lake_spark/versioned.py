@@ -110,13 +110,9 @@ def merge_into(
             keys=keys,
             order_col=order_col,
         )
-    # materialize before publishing: the plan reads the previous version
-    merged = merged.cache()
-    merged.count()
-    try:
-        return write_version(merged, root)
-    finally:
-        merged.unpersist()
+    # The plan reads the immutable _v=N and the pointer flips only after
+    # _v=N+1 is written, so the merge streams straight into the write.
+    return write_version(merged, root)
 
 
 def vacuum(root: str, keep_last: int = 2) -> list[int]:

@@ -1,4 +1,4 @@
-"""llm8.doc_embed_arrays (round-10 Arrow kernel) vs doc_embed_expr (the
+"""ann.doc_embed_arrays (round-10 Arrow kernel) vs doc_embed_expr (the
 original HOF expression): bit-identical vectors — same md5 bucket/sign
 recipe, exact integer folds both ways — including the whitespace-split
 edge cases (repeated/leading/trailing separators ⇒ empty tokens, which
@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_lake_spark.queries.llm8 import doc_embed_arrays, doc_embed_expr
+from data_lake_spark.queries.ann import doc_embed_arrays, doc_embed_expr
 
 _TEXTS = [
     "spark join window vector",

@@ -209,6 +209,7 @@ def test_hot_gram_marks_are_salt_bounded(spark, monkeypatch):
     # bucket << hot count — structural, not an AQE runtime heuristic),
     # the marks stage is a (h, salt) join not a Window over raw h, and
     # the spans are bit-identical to the unsalted reference path.
+    from data_lake_spark.operators import textdedup
     from data_lake_spark.operators.textdedup import (
         exact_substr_spans,
         gram_keeper_marks,
@@ -225,7 +226,7 @@ def test_hot_gram_marks_are_salt_bounded(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(i, text(i)) for i in range(n_docs)], "doc_id long, text string"
     )
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALTS", str(salts))
+    monkeypatch.setattr(textdedup, "_GRAM_SALTS", salts)
     grams = token_kgrams(docs, k, guard_pos=True).withColumn(
         "enc", pack_doc_pos(F.col("doc_id"), F.col("pos"), pos_bounded=True)
     )
@@ -257,7 +258,7 @@ def test_hot_gram_marks_are_salt_bounded(spark, monkeypatch):
 
     # 3. spans identical to the unsalted reference (the r10 window form)
     salted = sorted(map(tuple, exact_substr_spans(docs, k=k, min_tokens=k).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALTS", "0")
+    monkeypatch.setattr(textdedup, "_GRAM_SALTS", 0)
     window = sorted(map(tuple, exact_substr_spans(docs, k=k, min_tokens=k).collect()))
     assert salted == window
     assert len(salted) == hot_count - 1  # every non-keeper occurrence

@@ -32,3 +32,17 @@ def test_registry_contract(spark):
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 20
+
+
+def test_full_registry_wiring(monkeypatch):
+    from data_lake_spark import queries
+
+    window = queries._DRIVER_WINDOW_PRIORITY
+    assert list(full_registry())[: len(window)] == window
+    with monkeypatch.context() as m:
+        m.setattr(queries, "_MODULES", (*queries._MODULES, "relational"))
+        with pytest.raises(ValueError, match="registered twice"):
+            full_registry()
+    monkeypatch.setattr(queries, "_DRIVER_WINDOW_PRIORITY", [*window, "no_such_query"])
+    with pytest.raises(ValueError, match="no_such_query"):
+        full_registry()

@@ -636,7 +636,7 @@ def test_sq_search_scale_evaluated_once_per_row(spark, sf_dir):
     # reads that attribute. Inlined, array_max sits inside the lambda
     # and runs twice per element, 2d times per row.
     from data_lake_spark.catalog import load_table
-    from data_lake_spark.queries.llm9 import sq_codes_expr
+    from data_lake_spark.queries.ann import sq_codes_expr
 
     plan = _plan(spark, sf_dir, "sq_search")
     n_max = len(re.findall(r"array_max\(", plan))

@@ -1,4 +1,4 @@
-"""Property-based invariants for context-window chunking (queries/llm5):
+"""Property-based invariants for context-window chunking (queries/text.py):
 
 - coverage: every token position of every document falls inside at least
   one chunk (no boundary loss — the reason overlap exists);
@@ -16,7 +16,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from data_lake_spark.queries.llm5 import _CHUNK, _OVERLAP, _STRIDE, q_chunk_docs
+from data_lake_spark.queries.text import _CHUNK, _OVERLAP, _STRIDE, q_chunk_docs
 
 _SETTINGS = dict(
     max_examples=6,

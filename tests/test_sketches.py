@@ -89,7 +89,7 @@ def test_kll_merge_thousand_groups_rank_bound(spark):
     well inside the ±3% rank bound the query promises."""
     import bisect
 
-    from data_lake_spark.queries.sketches2 import kll_merged_quantiles
+    from data_lake_spark.queries.sketches import kll_merged_quantiles
 
     df = spark.range(0, 100_000).select(
         (F.col("id") % 1000).cast("string").alias("g"),

@@ -531,7 +531,7 @@ def test_table_rewrite_propagates_takedown_to_stored_artifacts(
 ):
     import shutil as _sh
 
-    from data_lake_spark.queries.llm11 import stored_image_hashes
+    from data_lake_spark.queries.media import stored_image_hashes
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "store"))
     sf_dir = str(tmp_path / "sf")

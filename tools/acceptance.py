@@ -11,7 +11,7 @@ Usage: python tools/acceptance.py [sf_dir] [--only n1,n2] [--module m1,m2]
 
 ``--only`` limits the sweep to the named queries; ``--module`` to the
 queries whose implementation lives in a registry module whose name
-contains any given token (e.g. ``--module llm12,corpus_q``). Sharding
+contains any given token (e.g. ``--module ann,corpus_q``). Sharding
 by module keeps per-addition re-gates cheap as the registry grows —
 the full sweep stays the per-round gate.
 """

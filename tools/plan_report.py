@@ -96,7 +96,7 @@ split-sized cluster files (128 MB row groups) the map-only form
 parallelizes for free AND skips the tokens×16-row shuffle entirely, so
 it stays the default; `operators/textdedup.simhash16_exploded` keeps
 the shuffle regime available (bit-identical, parity-tested), and
-queries/llm8.py shows the local remedy when spread is needed on
+queries/ann.py shows the local remedy when spread is needed on
 single-row-group data — one narrow (id, text) exchange before the
 expensive projection.
 
