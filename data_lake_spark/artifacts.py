@@ -33,6 +33,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_lake_spark.catalog import _fingerprint_path, read_parquet
+
 _STORE_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
 
 
@@ -42,22 +44,6 @@ def _store_root() -> str:
     )
     os.makedirs(root, exist_ok=True)
     return root
-
-
-def _fingerprint_path(p: str, h: "hashlib._Hash") -> None:
-    """Digest (relative name, size, mtime_ns) of a file, or of every
-    data file under a directory (parquet tables may be either)."""
-    if os.path.isdir(p):
-        for dirpath, _, names in sorted(os.walk(p)):
-            for n in sorted(names):
-                if n.startswith((".", "_")):
-                    continue
-                _fingerprint_path(os.path.join(dirpath, n), h)
-        return
-    st = os.stat(p)
-    h.update(p.encode())
-    h.update(str(st.st_size).encode())
-    h.update(str(st.st_mtime_ns).encode())
 
 
 def artifact_path(
@@ -136,7 +122,7 @@ def stored_artifact(
             # committed copy is parked aside) — sweep it back rather
             # than reading whatever junk sits at the final path
             _restore_committed_husk(path, marker)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _restore_committed_husk(path: str, marker: str) -> None:

@@ -1,15 +1,25 @@
 """Catalog: load the warehouse tables and register them as views.
 
 Replaces the reference's Glue database + six crawlers
-(``/root/reference/src/cloudformation/data-lake-stack.yml:218-276``): Spark
-infers parquet schemas on read, and ``register_views`` is the crawler — it
-makes every table addressable by name from ``spark.sql`` exactly like
-Athena's two-part names (``earnings.py:74-75``).
+(``/root/reference/src/cloudformation/data-lake-stack.yml:218-276``).
+The crawler's job — register each table's schema once, so queries plan
+from the catalog — is the schema registry behind :func:`read_parquet`:
+a process-level map from a parquet path to the ``StructType`` Spark
+inferred for it, valid while the path's fingerprint (name,
+size and mtime_ns of every data file) and the session's four
+inference-changing parquet confs are unchanged. A hit reads with the
+stored schema, so the footer-inference Spark job runs once per table
+version, not once per query. The registry holds metadata only, never
+DataFrames or results. ``register_views`` makes tables addressable by
+name from ``spark.sql`` exactly like Athena's two-part names
+(``earnings.py:74-75``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,8 +43,73 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 
+# Session confs that change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# Registry size in (path, confs) entries, oldest evicted first: every
+# versioned snapshot directory is a distinct path. Writers take the lock
+# (the dashboard reads and commits on several threads at once).
+_MAX_SCHEMAS = 256
+_SCHEMAS: dict[tuple[str, tuple], tuple[str, T.StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _fingerprint_path(p: str, h: "hashlib._Hash") -> None:
+    """Digest (relative name, size, mtime_ns) of a file, or of every
+    data file under a directory (parquet tables may be either)."""
+    if os.path.isdir(p):
+        for dirpath, _, names in sorted(os.walk(p)):
+            for n in sorted(names):
+                if n.startswith((".", "_")):
+                    continue
+                _fingerprint_path(os.path.join(dirpath, n), h)
+        return
+    st = os.stat(p)
+    h.update(p.encode())
+    h.update(str(st.st_size).encode())
+    h.update(str(st.st_mtime_ns).encode())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    table version: the first read infers it (one footer job) and
+    registers it; later reads of the same unchanged files under the same
+    inference confs pass it via ``.schema(...)`` and launch no job.
+    Rewriting, adding or removing a data file changes the fingerprint,
+    so the next read infers again and replaces the entry. Paths that are
+    not local files or directories (globs, remote URIs) are read
+    uncached."""
+    h = hashlib.sha1()
+    try:
+        # fingerprint BEFORE inferring: a file that changes in between
+        # leaves a stale fingerprint, so the next read re-infers
+        _fingerprint_path(path, h)
+    except OSError:  # not a local path, or files moved under the walk
+        return spark.read.parquet(path)
+    fp = h.hexdigest()
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.pop(key, None)  # a replaced entry counts as newest
+        _SCHEMAS[key] = (fp, schema)
+        while len(_SCHEMAS) > _MAX_SCHEMAS:
+            del _SCHEMAS[next(iter(_SCHEMAS))]
+    return df
 
 
 def _normalize(df: DataFrame, name: str) -> DataFrame:
@@ -82,7 +157,7 @@ def load_table(
     scanner. At 100 TB this is the difference between an incremental scan
     and a full one.
     """
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if since_ns is not None and name == "events":
         dt = df.schema["ts"].dataType
         us = int(since_ns) // 1000
@@ -102,10 +177,13 @@ def load_table(
     return _normalize(df, name)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (SURVEY §2.1 S8)."""
+def register_views(
+    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
+) -> dict[str, DataFrame]:
+    """Register the named testdata tables (default: all) as temp views
+    (SURVEY §2.1 S8)."""
     out: dict[str, DataFrame] = {}
-    for name in TABLES:
+    for name in names:
         if os.path.exists(table_path(sf_dir, name)):
             df = load_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)

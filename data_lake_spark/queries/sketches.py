@@ -195,9 +195,11 @@ def q_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_types"),
     )
     exact = e.agg(F.count_distinct("user_id").alias("exact_users"))
+    # empty input: no users and an estimate of 0; the floor of 1 keeps
+    # the relative error defined (0) instead of dividing by zero
     rel_err = F.abs(
         F.col("approx_users").cast("double") - F.col("exact_users").cast("double")
-    ) / F.col("exact_users").cast("double")
+    ) / F.greatest(F.col("exact_users").cast("double"), F.lit(1.0))
     return (
         merged.crossJoin(F.broadcast(exact))
         .select(
@@ -259,7 +261,8 @@ def kll_merged_quantiles(
         F.kll_sketch_get_quantile_double(
             F.aggregate(
                 F.slice(F.col("sks"), 2, 1_000_000),
-                F.element_at(F.col("sks"), 1)["sk"],
+                # no groups (empty input): a NULL sketch, NULL quantiles
+                F.try_element_at(F.col("sks"), F.lit(1))["sk"],
                 lambda acc, s: F.kll_sketch_merge_double(acc, s["sk"]),
             ),
             F.lit(qs),
@@ -305,7 +308,8 @@ def q_kll_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("exact_q")[0].alias("p50_exact"),
         F.col("exact_q")[1].alias("p90_exact"),
         F.col("exact_q")[2].alias("p99_exact"),
-        within.alias("within_tolerance"),
+        # empty input: nothing to bound (both sides' quantiles are NULL)
+        ((F.col("n_types") == 0) | within).alias("within_tolerance"),
     )
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_lake_spark.catalog import register_views
+from data_lake_spark.catalog import TABLES, register_views
 from data_lake_spark.queries import QuerySpec
 from data_lake_spark.sqlcompat import run_athena_sql
 
@@ -43,7 +43,9 @@ def _msum(expr: str) -> str:
 
 
 def _run(spark: SparkSession, sf_dir: str, athena_sql: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    # register only the tables the text names, not all ten
+    names = tuple(t for t in TABLES if f'"data_lake_db"."{t}"' in athena_sql)
+    register_views(spark, sf_dir, names)
     return run_athena_sql(spark, athena_sql)
 
 

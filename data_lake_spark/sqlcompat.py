@@ -35,6 +35,8 @@ Dialect facts encoded here (SURVEY §2.9 parity table):
 from __future__ import annotations
 
 import re
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,11 +95,23 @@ _COMPAT_FUNCTIONS: tuple[str, ...] = (
 )
 
 
+# Sessions that already hold the shims. Temporary functions belong to
+# one session (``spark.newSession()`` starts without them), and a
+# stopped session drops out of the set with its last reference.
+_SHIMMED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+_SHIMMED_LOCK = threading.Lock()
+
+
 def register_presto_compat(spark: SparkSession) -> None:
-    """Install the Presto scalar-function shims as temp SQL UDFs
-    (idempotent; CREATE OR REPLACE)."""
-    for stmt in _COMPAT_FUNCTIONS:
-        spark.sql(stmt)
+    """Install the Presto scalar-function shims as temp SQL UDFs, once
+    per session: the first call on a session runs the CREATE OR REPLACE
+    statements, later calls on it issue no ``spark.sql``."""
+    with _SHIMMED_LOCK:
+        if spark in _SHIMMED:
+            return
+        for stmt in _COMPAT_FUNCTIONS:
+            spark.sql(stmt)
+        _SHIMMED.add(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_lake_spark.catalog import read_parquet
+
 _POINTER = "_LATEST"
 
 
@@ -82,7 +84,7 @@ def read_version(
     v = current_version(root) if version is None else version
     if v == 0:
         raise FileNotFoundError(f"no published version at {root}")
-    return spark.read.parquet(_vdir(root, v))
+    return read_parquet(spark, _vdir(root, v))
 
 
 def merge_into(
@@ -217,7 +219,9 @@ def read_table(
         raise FileNotFoundError(
             f"table {table!r} not in snapshot {snap['id']} at {root}"
         )
-    return spark.read.parquet(_vdir(os.path.join(root, table), snap["tables"][table]))
+    return read_parquet(
+        spark, _vdir(os.path.join(root, table), snap["tables"][table])
+    )
 
 
 def version_diff(

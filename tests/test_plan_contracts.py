@@ -652,3 +652,48 @@ def test_sq_search_scale_evaluated_once_per_row(spark, sf_dir):
         ),
     )
     assert re.search(r"lambdafunction\([^\n]*array_max", inlined), inlined
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "site", ["load_table", "read_version", "stored_artifact", "athena_weekly"]
+)
+def test_warm_reads_and_builds_launch_no_jobs(
+    spark, sf_dir, tmp_path, monkeypatch, site
+):
+    # after one warm call the schema registry serves every parquet
+    # schema, the Athena views and shims are in place, and the build is
+    # pure planning: no footer-inference (or any other) Spark job
+    from data_lake_spark import versioned
+    from data_lake_spark.artifacts import stored_artifact
+    from data_lake_spark.catalog import load_table
+
+    root = str(tmp_path / "versioned")
+    versioned.write_version(spark.range(5).selectExpr("id AS k"), root)
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "store"))
+    fn = {
+        "load_table": lambda: load_table(spark, sf_dir, "orders"),
+        "read_version": lambda: versioned.read_version(spark, root, 1),
+        # the build runs on the warm call only; later calls just read
+        "stored_artifact": lambda: stored_artifact(
+            spark, sf_dir, "budget_toy", ["region"],
+            lambda: spark.range(3).selectExpr("id AS k"),
+        ),
+        "athena_weekly": lambda: _REG["athena_weekly"].fn(spark, sf_dir),
+    }[site]
+    fn()
+    assert _jobs_launched(spark, fn) == 0

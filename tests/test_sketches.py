@@ -114,3 +114,20 @@ def test_kll_merge_thousand_groups_rank_bound(spark):
             assert lo < hi, (a, "merged quantile not an input element")
             best = min(abs(rk / n - q) for rk in (lo, hi - 1))
             assert best <= 0.03, (nparts, q, a, best)
+
+
+def test_sketch_queries_on_empty_events_match_oracle(spark, sf_dir, tmp_path):
+    # an empty events table with the real schema: theta_distinct used to
+    # divide by zero and kll_quantile to index an empty sketch list; the
+    # oracle answers n_types = 0 and within_tolerance = TRUE
+    import pyarrow.parquet as pq
+
+    from data_lake_spark.catalog import table_path
+    from tests.compare import compare
+
+    lake = str(tmp_path)
+    events = pq.read_table(table_path(sf_dir, "events"))
+    pq.write_table(events.slice(0, 0), table_path(lake, "events"))
+    reg = full_registry()
+    for name in ("theta_distinct", "kll_quantile"):
+        compare(reg[name].fn(spark, lake), reg[name].oracle, lake)

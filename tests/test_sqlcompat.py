@@ -105,6 +105,27 @@ def test_presto_date_add_units(spark):
     assert row.d == datetime.date(2025, 1, 2)
 
 
+def test_shims_installed_once_per_session(spark, monkeypatch):
+    register_presto_compat(spark)
+
+    def no_sql(*a, **k):
+        raise AssertionError("shims re-registered on the same session")
+
+    monkeypatch.setattr(spark, "sql", no_sql)
+    register_presto_compat(spark)
+    monkeypatch.undo()
+
+    # temporary functions belong to one session: a new one installs its own
+    other = spark.newSession()
+    register_presto_compat(other)
+    row = other.sql(
+        "SELECT day_of_week(DATE '2024-09-02') AS d,"
+        "       week(DATE '2021-01-01') AS w,"
+        "       presto_date_add('week', -1, DATE '2024-03-08') AS a"
+    ).first()
+    assert (row.d, row.w, row.a) == (1, 53, datetime.date(2024, 3, 1))
+
+
 def test_shims_inline_into_catalyst(spark):
     """SQL UDFs must constant-fold — the physical plan of a shim over a
     literal is a literal (no UDF node, no extra stage at any scale)."""
