@@ -39,7 +39,7 @@ class Check:
     # produces the violation-count aggregate expression for this check
     agg: Callable[[], Column]
     # row-level violation predicate, when the check is per-row (unique()
-    # is set-level and has none) — powers split_valid / stream gating
+    # is set-level and has none) — powers split_valid
     cond: Optional[Callable[[], Column]] = None
 
 
@@ -184,22 +184,3 @@ def split_valid(
     bad = tagged.filter(F.size("_violations") > 0)
     good = tagged.filter(F.size("_violations") == 0).drop("_violations")
     return good, bad
-
-
-def gated_stream_writer(
-    checks: Sequence[Check],
-    write_good: Callable[[DataFrame, int], None],
-    write_bad: Optional[Callable[[DataFrame, int], None]] = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body that quarantines invalid rows per micro-batch:
-    ``stream.writeStream.foreachBatch(gated_stream_writer(checks, good_fn,
-    bad_fn))``. Exactly-once discipline is the sinks' (idempotent writes
-    keyed by batch_id, as elsewhere in streaming/incremental.py)."""
-
-    def _body(batch: DataFrame, batch_id: int) -> None:
-        good, bad = split_valid(batch, checks)
-        write_good(good, batch_id)
-        if write_bad is not None:
-            write_bad(bad, batch_id)
-
-    return _body

@@ -6,9 +6,10 @@ and Glue job bookmarks (``data-lake-stack.yml:36``). The Spark-native
 equivalents:
 
 - a Structured Streaming file source with checkpointing (the bookmark),
-- ``foreachBatch`` + the batch MERGE from ``operators.upsert`` (the
-  record-push path, amortized over micro-batches — same semantics,
-  set-oriented cost),
+- a per-micro-batch handler + the batch MERGE from ``operators.upsert``
+  (the record-push path, amortized over micro-batches — same semantics,
+  set-oriented cost); every ingest that publishes per-batch directories
+  goes through the one sink, :func:`batch_sink`,
 - watermark + tumbling-window aggregation for the time-series rollups the
   serving layer asks for (this goes BEYOND the reference, which has no
   streaming operators — SURVEY §2.11 — but is the idiomatic Spark shape
@@ -17,13 +18,18 @@ equivalents:
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from data_lake_spark.functions.exact import sum_exact
+from data_lake_spark.streaming.takedown import (
+    filter_tombstoned,
+    read_tombstones,
+    screen_batch,
+)
 
 
 def windowed_event_rollup(
@@ -77,6 +83,68 @@ def start_file_ingest(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def batch_sink(
+    stream: DataFrame,
+    checkpoint: str,
+    fn: Callable[[DataFrame, int], Sequence[DataFrame]],
+    *,
+    outputs: Sequence[tuple[str, Sequence[str]]],
+    screen: Optional[tuple[str, Sequence[str]]] = None,
+) -> StreamingQuery:
+    """The one micro-batch sink of every ingest that publishes per-batch
+    directories. ``fn(batch_df, batch_id)`` is the ingest's transform:
+    it returns one DataFrame per ``outputs`` entry ``(root,
+    partition_cols)``, in the same order. The sink owns the rest of
+    each micro-batch, in this order:
+
+    1. the source batch is persisted for the call (unpersisted after),
+       so a transform feeding several outputs reads its source once;
+    2. an empty source batch publishes nothing;
+    3. with ``screen=(index_root, id_cols)`` the batch goes through
+       :func:`takedown.screen_batch` first: a replay never re-lands a
+       deleted id's rows on disk;
+    4. a batch that the screen empties does NOT return early — ``fn``
+       and every overwrite still run, so a crash REPLAY of a batch whose
+       ids were since deleted EMPTIES the directories the original run
+       wrote (an early return would leave the deleted rows on disk,
+       exactly the window the screen exists to close);
+    5. frame i is written with overwrite, partitioned by its columns, to
+       ``<root_i>/batch_id=<n>``, in declared order — a frame whose plan
+       reads an output root must be listed before that root.
+
+    Idempotence: a crash-replayed micro-batch republishes identical
+    files into the same ``batch_id=<n>`` directories instead of
+    appending duplicate rows — exactly-once per (checkpoint, batch id),
+    the role Delta's one transaction id per (app, batch) plays. Readers
+    see ``batch_id`` as a partition column (:func:`read_ingest_zone`)."""
+
+    def _publish(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            batch = screen_batch(batch_df, *screen) if screen else batch_df
+            frames = fn(batch, batch_id)
+            if len(frames) != len(outputs):
+                raise ValueError(
+                    f"batch_sink: transform returned {len(frames)} frames "
+                    f"for {len(outputs)} outputs"
+                )
+            for (root, cols), frame in zip(outputs, frames):
+                frame.write.mode("overwrite").partitionBy(*cols).parquet(
+                    f"{root}/batch_id={int(batch_id)}"
+                )
+        finally:
+            batch_df.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(_publish)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start()
+    )
 
 
 def sessionize(
@@ -240,12 +308,9 @@ def start_ivf_index_ingest(
     (standard IVF practice); retrain offline with operators.kmeans and
     rewrite when drift warrants.
 
-    Each batch lands in its own ``batch_id=<n>`` directory with
-    overwrite (never a root-level append): a crash-replayed micro-batch
-    republishes identical files instead of appending duplicate rows —
-    the same idempotent exactly-once pattern as start_lsh_dedup_ingest.
-    Readers see ``batch_id`` as an extra partition column; cell pruning
-    is unaffected (cell dirs nest inside each batch dir).
+    Published through :func:`batch_sink` (per-batch overwrite, takedown
+    screen on ``index_root``); cell dirs nest inside each batch dir, so
+    cell pruning is unaffected.
 
     Reader contract: a vector RE-ingested in a later batch leaves rows
     under BOTH batch directories (crash-replay idempotence protects
@@ -259,30 +324,16 @@ def start_ivf_index_ingest(
 
     cent = centroids.localCheckpoint()
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # write-side takedown guard: a crash-replayed batch must not
-        # re-land a deleted vector's rows (takedown.screen_batch)
-        from data_lake_spark.streaming.takedown import screen_batch
-
-        # no early return on a fully-screened batch: the overwrite
-        # below must still run so a crash REPLAY of a batch whose docs
-        # were since deleted EMPTIES the previously-written dir — an
-        # early return would leave the deleted rows on disk, exactly
-        # the window the guard exists to close
-        batch_df = screen_batch(batch_df, index_root, [id_col])
+    def _assign(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         assigned = assign_cells(_elems(batch_df, id_col, vec_col), cent, id_col)
-        out = batch_df.join(assigned.select(id_col, "cell"), id_col)
-        out.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{index_root}/batch_id={int(batch_id)}"
-        )
+        return [batch_df.join(assigned.select(id_col, "cell"), id_col)]
 
-    return (
-        emb_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        emb_stream,
+        checkpoint,
+        _assign,
+        outputs=[(index_root, ["cell"])],
+        screen=(index_root, [id_col]),
     )
 
 
@@ -308,45 +359,29 @@ def start_ivfpq_index_ingest(
     operators/pq.pq_codebook_lit — a stored artifact, exactly what a
     production system would version alongside the index.
 
-    Each batch lands in its own ``batch_id=<n>`` directory with
-    overwrite (never a root-level append): a crash-replayed micro-batch
-    (files written, checkpoint offset not committed) republishes
-    identical files instead of appending duplicate (vec_id, codes, cell)
-    rows that would double-count approx_dot in any ADC scoring join —
-    the same idempotency pattern as start_lsh_dedup_ingest. Readers see
-    ``batch_id`` as an extra partition column; cell pruning is
-    unaffected."""
+    Published through :func:`batch_sink` (per-batch overwrite, takedown
+    screen on ``index_root``): a replay cannot append duplicate
+    (vec_id, codes, cell) rows that would double-count approx_dot in an
+    ADC scoring join."""
     from data_lake_spark.operators.kmeans import _elems, assign_cells
     from data_lake_spark.operators.pq import pq_codes_array
 
     cent = centroids.localCheckpoint()
     values, present, subdim = codebook
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from data_lake_spark.streaming.takedown import screen_batch
-
-        # no early return on a fully-screened batch: the overwrite
-        # below must still run so a crash REPLAY of a batch whose docs
-        # were since deleted EMPTIES the previously-written dir — an
-        # early return would leave the deleted rows on disk, exactly
-        # the window the guard exists to close
-        batch_df = screen_batch(batch_df, index_root, [id_col])
+    def _encode(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         assigned = assign_cells(_elems(batch_df, id_col, vec_col), cent, id_col)
         codes = pq_codes_array(
             batch_df, values, present, subdim, id_col, vec_col
         )
-        out = codes.join(assigned.select(id_col, "cell"), id_col)
-        out.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{index_root}/batch_id={int(batch_id)}"
-        )
+        return [codes.join(assigned.select(id_col, "cell"), id_col)]
 
-    return (
-        emb_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        emb_stream,
+        checkpoint,
+        _encode,
+        outputs=[(index_root, ["cell"])],
+        screen=(index_root, [id_col]),
     )
 
 
@@ -382,10 +417,11 @@ def start_lsh_dedup_ingest(
     3. history screen: batch bands equi-join the persisted index on
        (band_idx, band_hash); candidates verified the same way against
        the indexed signatures;
-    4. survivors append to ``accepted_root`` and their bands +
-       signatures to ``index_root`` — both written to per-batch
-       directories with overwrite, so micro-batch REPLAY after a crash
-       republishes identical files (idempotent exactly-once).
+    4. survivors go to ``accepted_root`` and their bands + signatures
+       to ``index_root``, published through :func:`batch_sink`. Its
+       takedown screen is keyed on ``accepted_root``: the accepted zone
+       holds FULL document text, so tombstone the accepted root to
+       retire an id permanently.
 
     Docs shorter than ``n`` tokens produce no shingles: they pass
     through as novel with no index entry (route them to exact-hash
@@ -401,8 +437,6 @@ def start_lsh_dedup_ingest(
     correct LSH compaction needs a coverage rule the screen filter
     understands (fold dirs ≤ m into an id that still satisfies
     ``< current`` for every live batch id > m)."""
-    from pyspark.errors import AnalysisException
-
     from data_lake_spark.operators.textdedup import (
         cap_hot_bands,
         lsh_bands,
@@ -417,53 +451,8 @@ def start_lsh_dedup_ingest(
             lambda acc, v: acc + v,
         ) / F.lit(n_hashes)
 
-    def _dedup(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _dedup(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         spark = batch_df.sparkSession
-        # takedown write-side guard: the accepted zone holds FULL
-        # document text, so a crash-replayed batch must never re-write
-        # a taken-down document's content to disk (read-side filtering
-        # is enough for derived hashes, not for the content itself) —
-        # tombstone the ACCEPTED root to retire an id permanently
-        from data_lake_spark.streaming.takedown import (
-            filter_tombstoned,
-            read_tombstones,
-        )
-
-        batch_df = filter_tombstoned(
-            batch_df, read_tombstones(spark, accepted_root, id_col), [id_col]
-        )
-        if batch_df.isEmpty():
-            # fully-screened replay: the overwrites must still run so
-            # the previously-written dirs are EMPTIED — but the full
-            # candidate lineage (two eager localCheckpoints + the
-            # history-screen read) would pay several Spark jobs for
-            # nothing. Write the two empty frames directly, with
-            # schemas derived from the SAME expressions the normal
-            # path writes (lazy on an empty input — two tiny jobs).
-            empty = batch_df.limit(0)
-            empty.write.mode("overwrite").parquet(
-                f"{accepted_root}/batch_id={batch_id}"
-            )
-            sc = [f"sig{i}" for i in range(n_hashes)]
-            sigs0 = minhash_signatures(
-                shingles(empty, n, id_col, text_col), n_hashes, id_col
-            ).select(F.col(id_col), F.array(*sc).alias("sig"))
-            bands0 = lsh_bands(
-                sigs0.select(
-                    id_col,
-                    *[F.col("sig")[i].alias(f"sig{i}") for i in range(n_hashes)],
-                ),
-                rows_per_band,
-                id_col,
-            ).join(sigs0, id_col).select(
-                id_col, "band_idx", "band_hash", "sig"
-            )
-            bands0.write.mode("overwrite").partitionBy("band_idx").parquet(
-                f"{index_root}/batch_id={batch_id}"
-            )
-            return
         sig_cols = [f"sig{i}" for i in range(n_hashes)]
         sigs = (
             minhash_signatures(shingles(batch_df, n, id_col, text_col), n_hashes, id_col)
@@ -496,16 +485,10 @@ def start_lsh_dedup_ingest(
             .distinct()
         )
 
-        # history: batch bands vs the persisted index. Existence is
-        # probed via the Spark reader (AnalysisException on a missing or
-        # empty root), not driver-local os.path — index_root may be on
-        # any Hadoop-visible filesystem (HDFS/S3), where a local check
-        # would be silently False and skip the screen entirely.
-        try:
-            idx_all = spark.read.parquet(index_root)
-        except AnalysisException:
-            idx_all = None
-        if idx_all is not None:
+        # history: batch bands vs the persisted index (a root no batch
+        # has published to yet reads with no signature column)
+        idx_all = read_ingest_zone(spark, index_root)
+        if "sig" in idx_all.columns:
             # only index partitions written by EARLIER batches: replaying
             # batch N after a crash (or a full-source replay) must screen
             # against exactly the state the original batch N saw — its own
@@ -515,11 +498,6 @@ def start_lsh_dedup_ingest(
             # stop suppressing lookalikes the moment the tombstone
             # lands (the next genuine arrival of that content is
             # accepted as the new canonical copy)
-            from data_lake_spark.streaming.takedown import (
-                filter_tombstoned,
-                read_tombstones,
-            )
-
             idx = (
                 filter_tombstoned(
                     idx_all.filter(
@@ -542,21 +520,17 @@ def start_lsh_dedup_ingest(
         dups = dups.localCheckpoint()
 
         novel = batch_df.join(dups, id_col, "left_anti")
-        novel.write.mode("overwrite").parquet(
-            f"{accepted_root}/batch_id={batch_id}"
-        )
         novel_bands = bands.join(dups, id_col, "left_anti").select(
             id_col, "band_idx", "band_hash", "sig"
         )
-        novel_bands.write.mode("overwrite").partitionBy("band_idx").parquet(
-            f"{index_root}/batch_id={batch_id}"
-        )
+        return [novel, novel_bands]
 
-    return (
-        docs_stream.writeStream.foreachBatch(_dedup)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        docs_stream,
+        checkpoint,
+        _dedup,
+        outputs=[(accepted_root, []), (index_root, ["band_idx"])],
+        screen=(accepted_root, [id_col]),
     )
 
 
@@ -589,10 +563,8 @@ def start_dhash_index_ingest(
        (band, band_val) — exhaustive for Hamming ≤ n_bands−1 by
        pigeonhole, exactly the batch guarantee — refined by
        ``bit_count(XOR) ≤ max_hamming``;
-    4. verified pairs land in ``pairs_root/batch_id=<n>`` and the batch
-       hashes in ``index_root/batch_id=<n>`` — both per-batch OVERWRITE
-       dirs, so a crash-replayed micro-batch republishes identical
-       files (idempotent exactly-once, the house convention).
+    4. verified pairs go to ``pairs_root`` and the batch hashes to
+       ``index_root``, published through :func:`batch_sink`.
 
     History is filtered to ``batch_id < current`` — the replay ledger:
     a replayed batch screens against exactly the state the original
@@ -638,7 +610,7 @@ def start_audiofp_index_ingest(
     """The audio twin of :func:`start_dhash_index_ingest`: envelope
     fingerprints (operators/audiofp.py — real RIFF/PCM decode) instead
     of dHashes, IDENTICAL machinery from the 64-bit hash on — same
-    per-batch overwrite idempotence, same ``batch_id < current`` replay
+    :func:`batch_sink` publish, same ``batch_id < current`` replay
     ledger, same cumulative hot-bucket cap, same stream==batch pair-set
     equivalence (tests/test_dhash_stream.py exercises both through the
     shared worker)."""
@@ -671,46 +643,27 @@ def _start_hash_index_ingest(
 ):
     """Shared worker: any (media_id, dhash)-producing Arrow kernel
     rides the banded incremental-dedup machinery (see
-    start_dhash_index_ingest for the full contract)."""
-    from pyspark.errors import AnalysisException
-
+    start_dhash_index_ingest for the full contract). The takedown
+    screen runs BEFORE the Arrow decode: a replayed batch neither
+    re-hashes nor re-lands a deleted medium's rows."""
     from data_lake_spark.operators.imagehash import band_rows
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _pair(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         spark = batch_df.sparkSession
-        # write-side takedown guard BEFORE the Arrow decode: a
-        # crash-replayed batch neither re-hashes nor re-lands a deleted
-        # medium's rows (takedown.screen_batch); both roots are
-        # tombstoned together by the delete_ids contract
-        from data_lake_spark.streaming.takedown import screen_batch
-
-        # no early return when fully screened — see start_gram_index_
-        # ingest: the replay must overwrite the dir with the reduced set
-        batch_df = screen_batch(batch_df, index_root, ["media_id"])
         hashes = (
             hash_table_fn(batch_df)
             .filter(F.col("dhash").isNotNull())
             .localCheckpoint()  # the Arrow pass feeds 3 consumers
         )
         new_bands = band_rows(hashes, n_bands)
-        try:
-            idx = spark.read.parquet(index_root)
-        except AnalysisException:
-            idx = None
-        if idx is not None:
+        idx = read_ingest_zone(spark, index_root)
+        if "dhash" in idx.columns:  # some batch has published already
             hist = idx.filter(
                 F.col("batch_id") < F.lit(int(batch_id))
             ).select("media_id", "dhash")
             # takedown: deleted media stop pairing with new arrivals
             # the moment the tombstone lands (a replayed batch after a
             # takedown intentionally republishes the REDUCED pair set)
-            from data_lake_spark.streaming.takedown import (
-                filter_tombstoned,
-                read_tombstones,
-            )
-
             hist = filter_tombstoned(
                 hist,
                 read_tombstones(spark, index_root, "media_id"),
@@ -758,18 +711,16 @@ def _start_hash_index_ingest(
             .filter(F.col("hamming") <= max_hamming)
             .select("media_a", "media_b", "hamming")
         )
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_root}/batch_id={int(batch_id)}"
-        )
-        hashes.write.mode("overwrite").parquet(
-            f"{index_root}/batch_id={int(batch_id)}"
-        )
+        return [pairs, hashes]
 
-    return (
-        media_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    # pairs first: its plan reads index_root, which the second write
+    # overwrites
+    return batch_sink(
+        media_stream,
+        checkpoint,
+        _pair,
+        outputs=[(pairs_root, []), (index_root, [])],
+        screen=(index_root, ["media_id"]),
     )
 
 
@@ -782,11 +733,6 @@ def read_dhash_pairs(spark: SparkSession, pairs_root: str) -> DataFrame:
     Pairs recorded BEFORE a takedown (takedown.delete_ids against this
     pairs root) are filtered here: a deleted medium appears on neither
     side, so downstream keeper assignment never links through it."""
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
-
     pairs = (
         read_ingest_zone(spark, pairs_root)
         .select("media_a", "media_b", "hamming")
@@ -803,11 +749,6 @@ def read_hash_index(spark: SparkSession, index_root: str) -> DataFrame:
     """The live (media_id, dhash) rows of a dHash/audio fingerprint
     index — every batch dir, minus takedowns. The batch-side face of
     what the ingest's history screen sees."""
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
-
     idx = read_ingest_zone(spark, index_root).select("media_id", "dhash")
     return filter_tombstoned(
         idx, read_tombstones(spark, index_root, "media_id"), ["media_id"]
@@ -840,33 +781,15 @@ def start_gram_index_ingest(
     compacted offline by rewriting the folded frame as a single batch
     dir, the layout.compaction pattern).
 
-    Idempotence: per-batch ``batch_id=<n>`` overwrite dirs — a
-    crash-replayed micro-batch republishes identical partials (the
-    start_lsh_dedup_ingest convention), and SUM-merge double counting
-    cannot occur because replay overwrites rather than appends."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # write-side takedown guard: replay after a delete writes the
-        # REDUCED posting set (takedown.screen_batch)
-        from data_lake_spark.streaming.takedown import screen_batch
-
-        # no early return on a fully-screened batch: the overwrite
-        # below must still run so a crash REPLAY of a batch whose docs
-        # were since deleted EMPTIES the previously-written dir — an
-        # early return would leave the deleted rows on disk, exactly
-        # the window the guard exists to close
-        batch_df = screen_batch(batch_df, index_root, [id_col])
-        _gram_partials(batch_df, k, id_col, text_col).write.mode(
-            "overwrite"
-        ).parquet(f"{index_root}/batch_id={int(batch_id)}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    Published through :func:`batch_sink` (per-batch overwrite, takedown
+    screen on ``index_root``): replay overwrites rather than appends,
+    so the reader's SUM merge cannot double count."""
+    return batch_sink(
+        docs_stream,
+        checkpoint,
+        lambda batch_df, _: [_gram_partials(batch_df, k, id_col, text_col)],
+        outputs=[(index_root, [])],
+        screen=(index_root, [id_col]),
     )
 
 
@@ -912,29 +835,23 @@ def start_video_gram_ingest(
     exact_substr_spans_from_index over frame tokens; compaction and
     the coverage rule apply unchanged (compact_gram_index). The
     stream==batch span-set equivalence is pinned in
-    tests/test_dhash_stream.py."""
+    tests/test_dhash_stream.py.
+
+    Published through :func:`batch_sink`; the takedown screen runs
+    BEFORE the Arrow decode (the gram doc_id IS the media_id, and
+    on-disk tombstones are id-named)."""
     from data_lake_spark.operators.videofp import frame_token_docs
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # write-side takedown guard BEFORE the Arrow decode (the gram
-        # doc_id IS the media_id; on-disk tombstones are id-named)
-        from data_lake_spark.streaming.takedown import screen_batch
-
-        # no early return when fully screened — see start_gram_index_
-        # ingest: the replay must overwrite the dir with the reduced set
-        batch_df = screen_batch(batch_df, index_root, ["media_id"])
+    def _partials(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         docs = frame_token_docs(batch_df, ignore_hashes)
-        _gram_partials(docs, 2, "doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(f"{index_root}/batch_id={int(batch_id)}")
+        return [_gram_partials(docs, 2, "doc_id", "text")]
 
-    return (
-        media_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        media_stream,
+        checkpoint,
+        _partials,
+        outputs=[(index_root, [])],
+        screen=(index_root, ["media_id"]),
     )
 
 
@@ -978,11 +895,6 @@ def read_accepted(
     deleted CONTENT; this reader hides rows written before the
     takedown until the zone's next compaction/rewrite purges them
     (takedown.rewrite_purged)."""
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
-
     df = read_ingest_zone(spark, accepted_root)
     return filter_tombstoned(
         df, read_tombstones(spark, accepted_root, id_col), [id_col]
@@ -999,25 +911,9 @@ def read_vector_index(
     vector stops surfacing as an ANN candidate the moment the
     tombstone lands; its code bytes leave disk when the index is next
     rewritten/retrained (the codebook-refresh schedule)."""
-    from pyspark.errors import AnalysisException
-
     from data_lake_spark.operators.upsert import latest_batch
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
 
-    try:
-        raw = spark.read.parquet(index_root)
-    except AnalysisException:
-        # reachable state since full-delete replays EMPTY batch dirs:
-        # partitionBy on an empty frame writes _SUCCESS but no parquet
-        # footer, so a root whose every dir was emptied has no schema
-        # to infer — that is an empty index, not an error (the LSH and
-        # hash readers guard the same way)
-        return spark.createDataFrame(
-            [], f"{id_col} long, cell int, batch_id int"
-        )
+    raw = read_ingest_zone(spark, index_root, f"{id_col} long, cell int")
     idx = latest_batch(raw, id_col)
     return filter_tombstoned(
         idx, read_tombstones(spark, index_root, id_col), [id_col]
@@ -1049,10 +945,6 @@ def read_gram_index(spark: SparkSession, index_root: str) -> DataFrame:
     were all deleted stops marking anyone, and a deleted keeper's
     crown passes to the next-min survivor."""
     from data_lake_spark.operators.textdedup import _POS_BITS
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
 
     live, _, _ = _gram_index_live_ids(index_root)
     partials = spark.read.option("basePath", index_root).parquet(
@@ -1086,7 +978,7 @@ def compact_gram_index(spark: SparkSession, index_root: str) -> int:
     next compaction (or this one re-run) finishes the deletion.
 
     The NEWEST stream dir is never folded: Structured Streaming commits
-    a batch to its checkpoint only AFTER foreachBatch returns, so a
+    a batch to its checkpoint only AFTER its batch handler returns, so a
     crashed micro-batch is REPLAYED as an overwrite of the maximum
     stream id — if compaction folded that dir mid-rewrite it would bake
     partial content into the compacted result and then treat the
@@ -1122,10 +1014,6 @@ def compact_gram_index(spark: SparkSession, index_root: str) -> int:
     # merge analogy); the tombstone files stay, still screening any
     # stream dirs newer than this compaction
     from data_lake_spark.operators.textdedup import _POS_BITS
-    from data_lake_spark.streaming.takedown import (
-        filter_tombstoned,
-        read_tombstones,
-    )
 
     tomb = read_tombstones(spark, index_root)
     if tomb is not None:
@@ -1250,38 +1138,26 @@ def start_distinct_sketch_ingest(
     itself is never re-scanned (the batch face of queries/tsmon_q.
     q_sliding_distinct's sketch side).
 
-    Idempotence: each batch writes its own ``batch_id=<n>`` directory
-    with overwrite — a crash-replayed micro-batch republishes identical
-    partials instead of double-counting (the start_lsh_dedup_ingest
-    pattern). Partials are MERGEABLE, so a day spanning many batches is
-    correct by union; no reader dedup is needed (unlike the IVF index's
-    latest-batch rule) because HLL union is idempotent in the ELEMENTS
-    — re-ingesting the same user on the same day cannot inflate the
-    estimate.
+    Published through :func:`batch_sink`. Partials are MERGEABLE, so a
+    day spanning many batches is correct by union; no reader dedup is
+    needed (unlike the IVF index's latest-batch rule) because HLL union
+    is idempotent in the ELEMENTS — re-ingesting the same user on the
+    same day cannot inflate the estimate.
 
     Reader: :func:`read_distinct_sketches`."""
-    from pyspark.sql import functions as F
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partials = (
+    def _sketch(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
+        return [
             batch_df.select(
                 F.expr(f"{ts_col} div {day_ns}").alias("d"),
                 F.col(key_col),
             )
             .groupBy("d")
             .agg(F.hll_sketch_agg(key_col).alias("sk"))
-        )
-        partials.write.mode("overwrite").partitionBy("d").parquet(
-            f"{sketch_root}/batch_id={int(batch_id)}"
-        )
+        ]
 
-    return (
-        event_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        event_stream, checkpoint, _sketch, outputs=[(sketch_root, ["d"])]
     )
 
 
@@ -1292,11 +1168,10 @@ def read_distinct_sketches(
     batch. Day filters prune to ``d=`` partition directories before any
     row is read; a trailing-window distinct is hll_sketch_estimate over
     hll_union_agg of the window's days (see tsmon_q for the exact
-    window shape)."""
-    from pyspark.sql import functions as F
-
+    window shape). A root no batch has published to reads as an empty
+    frame."""
     return (
-        spark.read.parquet(sketch_root)
+        read_ingest_zone(spark, sketch_root, "d long, sk binary")
         .groupBy("d")
         .agg(F.hll_union_agg("sk").alias("sk"))
     )
@@ -1323,70 +1198,62 @@ def start_validated_ingest(
     over a NULL value) fails it, the Deequ convention, so incomplete
     rows cannot tunnel through a range check into the clean zone.
 
-    Idempotence: both sides write per-batch ``batch_id=<n>`` overwrite
-    directories (the start_lsh_dedup_ingest pattern) — a crash-replayed
-    micro-batch republishes identical files rather than duplicating
-    rows. Readers: :func:`read_ingest_zone` (either root), which also
-    exposes ``batch_id`` for audit.
+    Published through :func:`batch_sink` (clean, then quarantine).
+    Readers: :func:`read_ingest_zone` (either root), which also exposes
+    ``batch_id`` for audit.
 
     Scale: routing is ONE map-only projection per micro-batch (the
     reason string folds every predicate in whole-stage codegen — no
-    shuffle, no UDF); each side's write is partition-parallel. State is
-    zero — this gate never holds rows across batches."""
+    shuffle, no UDF) over the sink-persisted batch; each side's write
+    is partition-parallel. State is zero — this gate never holds rows
+    across batches."""
+    reasons = F.concat_ws(
+        ",",
+        *[
+            F.when(~F.coalesce(pred, F.lit(False)), F.lit(name))
+            for name, pred in checks
+        ],
+    )
 
-    def _route(batch_df: DataFrame, batch_id: int) -> None:
-        reasons = F.concat_ws(
-            ",",
-            *[
-                F.when(~F.coalesce(pred, F.lit(False)), F.lit(name))
-                for name, pred in checks
-            ],
-        )
-        # persist: the routed frame feeds TWO sinks (the standard
-        # foreachBatch two-sink pattern) — without it the source rows
-        # and every predicate would be re-read/re-evaluated per sink
-        routed = batch_df.withColumn("__dq_reasons", reasons).persist()
-        try:
-            if routed.isEmpty():
-                return
-            routed.filter(F.col("__dq_reasons") == "").drop(
-                "__dq_reasons"
-            ).write.mode("overwrite").parquet(
-                f"{clean_root}/batch_id={int(batch_id)}"
-            )
+    def _route(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
+        routed = batch_df.withColumn("__dq_reasons", reasons)
+        return [
+            routed.filter(F.col("__dq_reasons") == "").drop("__dq_reasons"),
             routed.filter(F.col("__dq_reasons") != "").withColumnRenamed(
                 "__dq_reasons", "dq_reasons"
-            ).write.mode("overwrite").parquet(
-                f"{quarantine_root}/batch_id={int(batch_id)}"
-            )
-        finally:
-            routed.unpersist()
+            ),
+        ]
 
-    return (
-        stream.writeStream.foreachBatch(_route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        stream,
+        checkpoint,
+        _route,
+        outputs=[(clean_root, []), (quarantine_root, [])],
     )
 
 
 def read_ingest_zone(
     spark: SparkSession, root: str, schema: Optional[str] = None
 ) -> DataFrame:
-    """Read a validated-ingest zone (clean or quarantine) with the
-    per-batch ``batch_id`` surfaced for audit. Empty zones (a run whose
-    every row routed to the other side) read as an empty frame rather
-    than a path error — pass ``schema`` (a DDL string of the INGEST
-    columns, without batch_id) if callers select data columns from a
-    possibly-empty zone; without it the fallback frame carries only
-    ``batch_id`` and a column reference would fail to resolve."""
+    """The one reader of a :func:`batch_sink` output root: every
+    ``batch_id=<n>`` dir, with ``batch_id`` surfaced as a column. A root
+    with no parquet footer yet — never written, every row routed to the
+    other zone, or every dir emptied by a full-delete replay (an empty
+    partitioned write leaves only ``_SUCCESS``) — reads as an empty
+    frame rather than a path error. Pass ``schema`` (a DDL string of
+    the INGEST columns, without batch_id) if callers select data
+    columns from a possibly-empty root; without it the fallback frame
+    carries only ``batch_id`` and a column reference would fail to
+    resolve. Existence is probed through the Spark reader, never
+    driver-local os.path: a root may live on any Hadoop-visible
+    filesystem (HDFS/S3), where a local check would be silently
+    False."""
     from pyspark.errors import AnalysisException
 
     try:
-        return (
-            spark.read.option("basePath", root)
-            .parquet(f"{root}/batch_id=*")
-        )
+        # the root itself, not a ``batch_id=*`` glob: Spark's
+        # streaming-metadata probe logs a stack trace for every glob
+        return spark.read.parquet(root)
     except AnalysisException:
         ddl = (schema + ", " if schema else "") + "batch_id long"
         return spark.createDataFrame([], ddl)
@@ -1423,56 +1290,44 @@ def start_k_anonymity_gate(
     partition the input exactly as the one-shot batch audit would
     (tests/test_stream_k_anon.py proves the equivalence).
 
-    Idempotence: per-batch ``batch_id=<n>`` overwrite directories on
-    both zones (the start_validated_ingest pattern) — a crash-replayed
-    micro-batch republishes identical files."""
+    Published through :func:`batch_sink` (release, then pending)."""
 
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            spark = batch_df.sparkSession
-            released = read_ingest_zone(spark, release_root)
-            new_counts = batch_df.groupBy(*qi_cols).agg(
-                F.count(F.lit(1)).alias("__n_new")
+    def _gate(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
+        spark = batch_df.sparkSession
+        released = read_ingest_zone(spark, release_root)
+        new_counts = batch_df.groupBy(*qi_cols).agg(
+            F.count(F.lit(1)).alias("__n_new")
+        )
+        if set(qi_cols) <= set(released.columns):
+            rel_counts = released.groupBy(*qi_cols).agg(
+                F.count(F.lit(1)).alias("__n_rel")
             )
-            if set(qi_cols) <= set(released.columns):
-                rel_counts = released.groupBy(*qi_cols).agg(
-                    F.count(F.lit(1)).alias("__n_rel")
-                )
-                decide = new_counts.join(rel_counts, qi_cols, "left")
-            else:  # empty zone: the fallback frame has no QI columns
-                decide = new_counts.withColumn(
-                    "__n_rel", F.lit(None).cast("long")
-                )
-            eligible = decide.filter(
-                F.col("__n_new") + F.coalesce("__n_rel", F.lit(0)) >= k
-            ).select(*qi_cols)
-            # materialize the eligible-class frame BEFORE writing: the
-            # release write overwrites batch dirs that the lazy
-            # release-zone read underpinning `eligible` still references
-            # (a crash-replayed batch would invalidate its own plan).
-            # The frame is bounded by the QI domain — the q_k_anonymity
-            # scale argument — so this is a bounded collect, and the
-            # rebuilt literal frame broadcasts into both routing joins.
-            ok = spark.createDataFrame(
-                eligible.collect(), eligible.schema
+            decide = new_counts.join(rel_counts, qi_cols, "left")
+        else:  # empty zone: the fallback frame has no QI columns
+            decide = new_counts.withColumn(
+                "__n_rel", F.lit(None).cast("long")
             )
-            batch_df.join(ok, qi_cols, "left_semi").write.mode(
-                "overwrite"
-            ).parquet(f"{release_root}/batch_id={int(batch_id)}")
-            batch_df.join(ok, qi_cols, "left_anti").write.mode(
-                "overwrite"
-            ).parquet(f"{pending_root}/batch_id={int(batch_id)}")
-        finally:
-            batch_df.unpersist()
+        eligible = decide.filter(
+            F.col("__n_new") + F.coalesce("__n_rel", F.lit(0)) >= k
+        ).select(*qi_cols)
+        # materialize the eligible-class frame BEFORE writing: the
+        # release write overwrites batch dirs that the lazy
+        # release-zone read underpinning `eligible` still references
+        # (a crash-replayed batch would invalidate its own plan).
+        # The frame is bounded by the QI domain — the q_k_anonymity
+        # scale argument — so this is a bounded collect, and the
+        # rebuilt literal frame broadcasts into both routing joins.
+        ok = spark.createDataFrame(eligible.collect(), eligible.schema)
+        return [
+            batch_df.join(ok, qi_cols, "left_semi"),
+            batch_df.join(ok, qi_cols, "left_anti"),
+        ]
 
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return batch_sink(
+        stream,
+        checkpoint,
+        _gate,
+        outputs=[(release_root, []), (pending_root, [])],
     )
 
 
@@ -1635,19 +1490,16 @@ def start_drift_monitor(
 
     Scale: per batch, one map-side-combinable groupBy(bin) over the
     micro-batch, then everything rides the bin-sized frame; the
-    reference never re-aggregates. Idempotence: per-batch
-    ``batch_id=<n>`` overwrite dirs (the start_validated_ingest
-    pattern); read with :func:`read_ingest_zone`."""
+    reference never re-aggregates. Published through
+    :func:`batch_sink`; read with :func:`read_ingest_zone`."""
+    from data_lake_spark.operators.drift import drift_report
+
     ref = reference.select(
         F.col(bin_col).cast("long").alias("bin"),
         F.col("a_cnt").cast("long").alias("a_cnt"),
     )
 
-    def _monitor(batch_df: DataFrame, batch_id: int) -> None:
-        from data_lake_spark.operators.drift import drift_report
-
-        if batch_df.isEmpty():
-            return
+    def _monitor(batch_df: DataFrame, batch_id: int) -> list[DataFrame]:
         b = batch_df.groupBy(
             F.col(bin_col).cast("long").alias("bin")
         ).agg(F.count(F.lit(1)).cast("long").alias("b_cnt"))
@@ -1659,13 +1511,6 @@ def start_drift_monitor(
                 F.coalesce("b_cnt", F.lit(0)).alias("b_cnt"),
             )
         )
-        drift_report(binned).write.mode("overwrite").parquet(
-            f"{out_root}/batch_id={int(batch_id)}"
-        )
+        return [drift_report(binned)]
 
-    return (
-        stream.writeStream.foreachBatch(_monitor)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return batch_sink(stream, checkpoint, _monitor, outputs=[(out_root, [])])

@@ -197,9 +197,10 @@ def read_tombstones(
     glob: index roots live on any Hadoop-visible filesystem (HDFS/S3),
     where an os-level listing is silently empty — which for a takedown
     would mean silently serving deleted content (the same trap
-    start_lsh_dedup_ingest's existence probe documents). All tombstone
-    files share the canonical single 'id' column (see delete_ids), so
-    a recursive read of the _tombstones subtree unions cleanly.
+    incremental.read_ingest_zone's existence probe documents). All
+    tombstone files share the canonical single 'id' column (see
+    delete_ids), so a recursive read of the _tombstones subtree unions
+    cleanly.
 
     The common NO-takedown case is memoized per root (``_NO_TOMB_MEMO``)
     so steady-state micro-batches don't pay a driver-side Spark probe
@@ -245,9 +246,10 @@ def filter_tombstoned(
 def screen_batch(
     batch_df: DataFrame, index_root: str, id_cols: Sequence[str]
 ) -> DataFrame:
-    """Write-side takedown guard for every streaming ingest: drop rows
-    whose id is tombstoned against ``index_root`` BEFORE any index
-    bytes are written. Read-side filtering keeps query results correct
+    """Write-side takedown guard for every streaming ingest, applied by
+    incremental.batch_sink (its ``screen``): drop rows whose id is
+    tombstoned against ``index_root`` BEFORE any index bytes are
+    written. Read-side filtering keeps query results correct
     regardless, but without this a crash-REPLAYED micro-batch re-lands
     a deleted id's rows on disk (hashes, signatures, codes, gram
     postings — or, in the LSH accepted zone, full document text),

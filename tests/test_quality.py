@@ -129,33 +129,6 @@ def test_split_valid_rejects_set_level_checks(dirty):
         split_valid(dirty, [unique("id")])
 
 
-def test_gated_stream_quarantines(spark, tmp_path):
-    from data_lake_spark.quality import gated_stream_writer
-
-    src = str(tmp_path / "src")
-    good_dir = str(tmp_path / "good")
-    bad_dir = str(tmp_path / "bad")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(1, 5.0), (2, -1.0), (3, 7.0)], "id int, amount double"
-    ).coalesce(1).write.mode("overwrite").json(src)
-
-    stream = spark.readStream.schema("id int, amount double").json(src)
-    body = gated_stream_writer(
-        [in_range("amount", 0, 100)],
-        lambda df, bid: df.write.mode("append").parquet(good_dir),
-        lambda df, bid: df.write.mode("append").parquet(bad_dir),
-    )
-    q = stream.writeStream.foreachBatch(body).option(
-        "checkpointLocation", ckpt
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    assert {r.id for r in spark.read.parquet(good_dir).collect()} == {1, 3}
-    bad = spark.read.parquet(bad_dir).collect()
-    assert [r.id for r in bad] == [2]
-    assert list(bad[0]._violations) == ["in_range(amount,0,100)"]
-
-
 def test_split_valid_partitions_exactly(spark, sf_dir):
     # good ∪ bad is the whole table; good re-passes the gate
     from data_lake_spark.quality import split_valid

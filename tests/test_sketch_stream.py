@@ -176,3 +176,13 @@ def test_day_indexed_queries_session_tz_independent(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
     assert utc == tokyo
+
+
+def test_read_distinct_sketches_on_an_unwritten_root(spark, tmp_path):
+    # no batch has published yet: an empty (d, sk) frame, not
+    # PATH_NOT_FOUND
+    got = read_distinct_sketches(spark, str(tmp_path / "never_written"))
+    assert got.columns == ["d", "sk"]
+    assert got.count() == 0
+    # the estimate expression still resolves on it
+    assert got.select(F.hll_sketch_estimate("sk")).count() == 0

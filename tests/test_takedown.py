@@ -11,6 +11,7 @@ import os
 import shutil
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_lake_spark.streaming.takedown import (
@@ -782,19 +783,154 @@ def test_gram_replay_after_takedown_writes_reduced_postings(spark, tmp_path):
     assert raw.filter(F.expr(f"keeper DIV {_POS_BITS}") == 2).count() > 0
 
 
-def test_full_delete_replay_empties_the_batch_dirs(spark, tmp_path):
-    # every ingested doc is taken down, then the whole source replays:
-    # the write-side guard must OVERWRITE each batch dir with the empty
-    # set — an early return would leave the deleted postings on disk
-    docs = _docs_df(spark, _GRAM_DOCS)
-    src = _write_batches(tmp_path, [docs])
-    index_root = _run_gram_ingest(spark, tmp_path, src)
-    assert spark.read.parquet(index_root).count() > 0
+def _full_delete_case(spark, tmp_path, family):
+    """(source frame, id column, start(stream, checkpoint), output
+    roots) for one screened ingest family; the takedown is recorded
+    against every output root."""
+    from data_lake_spark.catalog import load_table
+    from data_lake_spark.operators.kmeans import hash_seeds
+    from data_lake_spark.operators.pq import pq_codebook_lit
+    from data_lake_spark.operators.videofp import avi_from_text_col
+    from data_lake_spark.streaming import incremental as inc
 
-    delete_ids(spark, index_root, [1, 2, 3, 4])
-    shutil.rmtree(str(tmp_path / "gram_ckpt"))
-    _run_gram_ingest(spark, tmp_path, src)
-    assert spark.read.parquet(index_root).count() == 0
+    idx, side = str(tmp_path / "index"), str(tmp_path / "side")
+    if family == "gram":
+        return (
+            _docs_df(spark, _GRAM_DOCS),
+            "doc_id",
+            lambda st, ck: inc.start_gram_index_ingest(st, idx, ck, k=_K),
+            [idx],
+        )
+    if family == "video_gram":
+        return (
+            avi_from_text_col(_docs_df(spark, _GRAM_DOCS)),
+            "media_id",
+            lambda st, ck: inc.start_video_gram_ingest(st, idx, ck),
+            [idx],
+        )
+    if family == "dhash":  # side = pairs root
+        return (
+            _media_df(spark, _IMG_DOCS),
+            "media_id",
+            lambda st, ck: inc.start_dhash_index_ingest(st, side, idx, ck),
+            [side, idx],
+        )
+    if family == "lsh_dedup":  # side = accepted root
+        return (
+            _docs_df(spark, _GRAM_DOCS),
+            "doc_id",
+            lambda st, ck: inc.start_lsh_dedup_ingest(st, side, idx, ck),
+            [side, idx],
+        )
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(32)
+    centroids = hash_seeds(emb, k=4)
+    if family == "ivf":
+        start_fn, extra = inc.start_ivf_index_ingest, ()
+    else:
+        start_fn = inc.start_ivfpq_index_ingest
+        extra = (pq_codebook_lit(emb, m=4, k=8),)
+    return (
+        emb,
+        "vec_id",
+        lambda st, ck: start_fn(st, idx, centroids, *extra, ck),
+        [idx],
+    )
+
+
+@pytest.mark.parametrize(
+    "family", ["gram", "video_gram", "dhash", "ivf", "ivfpq", "lsh_dedup"]
+)
+def test_full_delete_replay_empties_the_batch_dirs(spark, tmp_path, family):
+    # every ingested id is taken down, then the whole source replays:
+    # batch_sink must still OVERWRITE each batch dir with the empty
+    # set — an early return on the screened batch would leave the
+    # deleted rows on disk
+    from data_lake_spark.streaming.incremental import read_ingest_zone
+
+    df, id_col, start, roots = _full_delete_case(spark, tmp_path, family)
+    src = _write_batches(tmp_path, [df])
+
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = start(stream, str(tmp_path / ckpt))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("ck1")
+    assert all(read_ingest_zone(spark, r).count() > 0 for r in roots)
+
+    ids = [r[id_col] for r in df.select(id_col).collect()]
+    delete_ids(spark, roots, ids, id_col=id_col)
+    run("ck2")  # checkpoint loss -> full replay
+    assert [read_ingest_zone(spark, r).count() for r in roots] == [0] * len(
+        roots
+    )
+
+
+def _sink_source(spark, tmp_path, batches):
+    src = _write_batches(tmp_path, batches, sub="sink_src")
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def test_batch_sink_rejects_a_frame_count_mismatch(spark, tmp_path):
+    from data_lake_spark.streaming.incremental import batch_sink
+
+    stream = _sink_source(spark, tmp_path, [_docs_df(spark, _GRAM_DOCS)])
+    q = batch_sink(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda batch_df, batch_id: [batch_df],
+        outputs=[(str(tmp_path / "a"), []), (str(tmp_path / "b"), [])],
+    )
+    try:
+        with pytest.raises(Exception, match="returned 1 frames for 2 outputs"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not os.path.exists(str(tmp_path / "a"))
+
+
+def test_batch_sink_publishes_nothing_for_an_empty_batch(spark, tmp_path):
+    from data_lake_spark.streaming.incremental import batch_sink
+
+    out = str(tmp_path / "out")
+    seen = []
+
+    def fn(batch_df, batch_id):
+        seen.append(batch_id)
+        return [batch_df]
+
+    stream = _sink_source(
+        spark,
+        tmp_path,
+        [_docs_df(spark, []), _docs_df(spark, _GRAM_DOCS[:1])],
+    )
+    q = batch_sink(stream, str(tmp_path / "ckpt"), fn, outputs=[(out, [])])
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen == [1]  # batch 0 was empty: the transform never ran
+    assert sorted(os.listdir(out)) == ["batch_id=1"]
+
+
+def test_incremental_annotations_resolve():
+    import typing
+
+    from data_lake_spark.streaming import incremental
+
+    hints = typing.get_type_hints(incremental.read_accepted)
+    assert hints["spark"] is incremental.SparkSession
 
 
 def test_delete_ids_before_first_ingest_is_atomic(spark, tmp_path):
